@@ -25,11 +25,8 @@ object JobProbe {
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled",
-        sys.env.getOrElse("GRAFT_AQE", "true"))
+      .config("spark.sql.adaptive.enabled", "true")
       .config("spark.ui.enabled", "false")
-      .config("spark.sql.files.openCostInBytes",
-        sys.env.getOrElse("GRAFT_OPEN_COST", "4194304"))
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     val qs = Queries.all.map(q => q.name -> q).toMap

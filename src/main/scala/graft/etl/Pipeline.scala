@@ -1,9 +1,13 @@
 package graft.etl
 
+import java.sql.Types
+
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.jdbc.{JdbcDialect, JdbcDialects, JdbcType}
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.types.{DataType, StringType, StructType}
 
 import graft.schema.PropertySchema
 
@@ -16,24 +20,31 @@ import graft.schema.PropertySchema
   * scripts/load_db.py:49-58). Structured Streaming's file source does all
   * of that natively: new-file detection, exactly-once per file via the
   * checkpoint, and `cleanSource=archive` for the move-on-completion.
+  *
+  * Each rule lives in one place: the TSV format in [[Tsv]], file arrival
+  * in [[arrivals]], the per-file transform in [[transformLeg]] and the
+  * JDBC append in [[loadToSink]].
   */
 object Pipeline {
 
-  /** Batch read of raw property TSVs ("*.csv", tab-separated, header —
-    * fidelity to scripts/extract.py:49-54) under a directory.
+  /** The reference's one interchange format, at all of its call sites
+    * (scripts/extract.py:49-54, scripts/transform.py:128-137,
+    * scripts/load_db.py:53-56): tab-separated, header row, files named
+    * "*.csv". Read options are ignored by the writer.
     */
+  private val Tsv: Map[String, String] = Map(
+    "sep" -> "\t",
+    "header" -> "true",
+    // quoted newlines inside values (pandas read_csv handles these by
+    // default; without multiLine a quoted record splits into malformed
+    // rows). Cost: multiLine CSV files are read whole, not split — fine
+    // for the reference's one-file-per-batch layout.
+    "multiLine" -> "true",
+    "pathGlobFilter" -> "*.csv")
+
+  /** Batch read of raw property TSVs under a directory. */
   def readRaw(spark: SparkSession, dir: String): DataFrame =
-    spark.read
-      .schema(PropertySchema.raw)
-      .option("sep", "\t")
-      .option("header", "true")
-      // quoted newlines inside values (pandas read_csv handles these by
-      // default; without multiLine a quoted record splits into malformed
-      // rows). Cost: multiLine CSV files are read whole, not split — fine
-      // for the reference's one-file-per-batch layout.
-      .option("multiLine", "true")
-      .option("pathGlobFilter", "*.csv")
-      .csv(dir)
+    spark.read.schema(PropertySchema.raw).options(Tsv).csv(dir)
 
   /** One batch run: read every pending raw file, transform, write the
     * transformed table (parquet — columnar beats the reference's CSV landing
@@ -70,9 +81,45 @@ object Pipeline {
     }
   }
 
-  /** Streaming form: the Spark-native replacement for the S3KeySensor loop.
+  /** File arrival, the Spark-native replacement for the S3KeySensor loop:
     * `maxFilesPerTrigger=1` reproduces the reference's one-file-per-run
     * semantics; `cleanSource=archive` reproduces archive-then-delete.
+    *
+    * Archive timing: Spark archives batch N's source files when batch N+1
+    * starts, so after an AvailableNow drain the LAST consumed file is
+    * archived by the next run (the daily re-trigger), not before stop.
+    */
+  private def arrivals(spark: SparkSession, schema: StructType, dir: String,
+      archiveDir: String): DataFrame =
+    spark.readStream.schema(schema).options(Tsv)
+      .option("maxFilesPerTrigger", 1)
+      .option("cleanSource", "archive")
+      .option("sourceArchiveDir", archiveDir)
+      .csv(dir)
+
+  /** Raw file arrival → [[Transform]] → `sink(transformed, batchId)`.
+    *
+    * foreachBatch applies the BATCH transform per micro-batch (= per file
+    * with maxFilesPerTrigger=1). Two reasons over a streaming Transform:
+    * (1) fidelity — the reference dedups WITHIN one CSV
+    *     (scripts/transform.py:62), not across the directory's history;
+    *     streaming dropDuplicates would dedup across every file ever seen.
+    * (2) scale — streaming dropDuplicates keeps one state row per distinct
+    *     link FOREVER (unbounded state growth); per-batch dedup holds no
+    *     standing state at all.
+    */
+  private def transformLeg(spark: SparkSession, rawDir: String,
+      archiveDir: String, checkpoint: String, dumpDate: String,
+      trigger: Trigger)(sink: (DataFrame, Long) => Unit): StreamingQuery =
+    arrivals(spark, PropertySchema.raw, rawDir, archiveDir).writeStream
+      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+        sink(Transform(batch, dumpDate), batchId)
+      }
+      .option("checkpointLocation", checkpoint)
+      .trigger(trigger)
+      .start()
+
+  /** Streaming form of [[runBatch]]: [[transformLeg]] appending parquet.
     *
     * Delivery: the checkpoint guarantees each file is PROCESSED once, but
     * the foreachBatch parquet append is not transactional with the offset
@@ -82,96 +129,40 @@ object Pipeline {
     * a transactional table format or partition output by batch id and
     * overwrite.
     *
-    * Archive timing: Spark archives batch N's source files when batch N+1
-    * starts, so after an AvailableNow drain the LAST consumed file is
-    * archived by the next run (the daily re-trigger), not before stop.
     * `Trigger.AvailableNow` = drain the backlog then stop (daily-batch
     * cadence); pass ProcessingTime for a resident pipeline.
     */
   def startStream(spark: SparkSession, rawDir: String, outDir: String,
       archiveDir: String, checkpoint: String, dumpDate: String,
-      trigger: Trigger = Trigger.AvailableNow()): StreamingQuery = {
-    val raw = spark.readStream
-      .schema(PropertySchema.raw)
-      .option("sep", "\t")
-      .option("header", "true")
-      .option("multiLine", "true")
-      .option("pathGlobFilter", "*.csv")
-      .option("maxFilesPerTrigger", 1)
-      .option("cleanSource", "archive")
-      .option("sourceArchiveDir", archiveDir)
-      .csv(rawDir)
-    // foreachBatch applies the BATCH transform per micro-batch (= per file
-    // with maxFilesPerTrigger=1). Two reasons over a streaming Transform:
-    // (1) fidelity — the reference dedups WITHIN one CSV
-    //     (scripts/transform.py:62), not across the directory's history;
-    //     streaming dropDuplicates would dedup across every file ever seen.
-    // (2) scale — streaming dropDuplicates keeps one state row per distinct
-    //     link FOREVER (unbounded state growth); per-batch dedup holds no
-    //     standing state at all.
-    raw.writeStream
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        Transform(batch, dumpDate).write.mode("append").parquet(outDir)
-      }
-      .option("checkpointLocation", checkpoint)
-      .trigger(trigger)
-      .start()
-  }
+      trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
+    transformLeg(spark, rawDir, archiveDir, checkpoint, dumpDate, trigger) {
+      (df, _) => df.write.mode("append").parquet(outDir)
+    }
 
-  /** TSV-with-header serialize sink — the reference's interchange format at
-    * all four of its call sites (scripts/extract.py:49-54,
-    * scripts/transform.py:128-137, scripts/load_db.py:53-56): tab-separated,
-    * header row, files named "*.csv". `singleFile` coalesces to one part to
+  /** TSV-with-header serialize sink. `singleFile` coalesces to one part to
     * mimic the reference's one-object-per-batch S3 layout; leave false at
     * scale so the write stays parallel.
     */
   def writeTsv(df: DataFrame, path: String, singleFile: Boolean = false): Unit = {
     val d = if (singleFile) df.coalesce(1) else df
-    d.write.option("sep", "\t").option("header", "true").mode("overwrite").csv(path)
+    d.write.options(Tsv).mode("overwrite").csv(path)
   }
-
-  /** Batch read of transformed TSVs (the second stage's input,
-    * scripts/load_db.py:17-21) with the canonical 10-column schema.
-    */
-  def readTransformed(spark: SparkSession, dir: String): DataFrame =
-    spark.read
-      .schema(PropertySchema.transformed)
-      .option("sep", "\t")
-      .option("header", "true")
-      // quoted newlines inside values (pandas read_csv handles these by
-      // default; without multiLine a quoted record splits into malformed
-      // rows). Cost: multiLine CSV files are read whole, not split — fine
-      // for the reference's one-file-per-batch layout.
-      .option("multiLine", "true")
-      .option("pathGlobFilter", "*.csv")
-      .csv(dir)
 
   /** Second pipeline stage (the reference's load DAG leg,
     * scripts/dag.py:61-69 + scripts/load_db.py:49-58): watch the
     * transformed-data directory, append each arriving TSV to the sink,
-    * archive-and-remove the input. Mirrors [[startStream]] for the
-    * transformed table.
+    * archive-and-remove the input.
     */
   def startLoadStream(spark: SparkSession, transformedDir: String,
       sinkDir: String, archiveDir: String, checkpoint: String,
-      trigger: Trigger = Trigger.AvailableNow()): StreamingQuery = {
-    val t = spark.readStream
-      .schema(PropertySchema.transformed)
-      .option("sep", "\t")
-      .option("header", "true")
-      .option("multiLine", "true")
-      .option("pathGlobFilter", "*.csv")
-      .option("maxFilesPerTrigger", 1)
-      .option("cleanSource", "archive")
-      .option("sourceArchiveDir", archiveDir)
-      .csv(transformedDir)
-    t.writeStream
+      trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
+    arrivals(spark, PropertySchema.transformed, transformedDir, archiveDir)
+      .writeStream
       .format("parquet")
       .option("path", sinkDir)
       .option("checkpointLocation", checkpoint)
       .trigger(trigger)
       .start()
-  }
 
   /** Timestamped object key (scripts/dag.py:39):
     * `raw_properties_<strftime %Y_%m_%d_%H%M%S in Europe/Prague>.csv`.
@@ -186,14 +177,39 @@ object Pipeline {
   }
 
   /** The reference's dtype map (scripts/load_db.py:35-46): every mapped
-    * string column is VARCHAR(255); shared by [[loadToSink]] and the
-    * streaming [[jdbcIdempotentAppend]] leg so both sinks create the
-    * same table shape.
+    * string column is VARCHAR(255).
     */
   private val JdbcDtypeMap: String =
     "purpose VARCHAR(255), address VARCHAR(255), region VARCHAR(255), " +
       "design VARCHAR(255), link VARCHAR(255), dump_date VARCHAR(255), " +
       "file_name VARCHAR(255)"
+
+  /** Spark's Derby dialect binds a NULL string as CLOB, which Derby rejects
+    * against the VARCHAR(255) columns above (ERROR 22005), failing the
+    * whole write. Registered dialects are consulted first, so this one
+    * changes only the NULL bind type; the CLOB column definition for a
+    * string column outside the map stays as it was.
+    */
+  private object DerbyNullStrings extends JdbcDialect {
+    override def canHandle(url: String): Boolean = url.startsWith("jdbc:derby")
+    override def getJDBCType(dt: DataType): Option[JdbcType] = dt match {
+      case StringType => Some(JdbcType("CLOB", Types.VARCHAR))
+      case _ => None
+    }
+  }
+  JdbcDialects.registerDialect(DerbyNullStrings)
+
+  /** JDBC append sink (the reference's load stage, scripts/load_db.py:32-47:
+    * `to_sql(if_exists='append', dtype=...)`) via Spark's JDBC writer: the
+    * first append creates the table with the dtype map, one connection per
+    * partition — parallel, unlike the reference's single connection.
+    */
+  def loadToSink(df: DataFrame, jdbcUrl: String, table: String): Unit =
+    df.write.format("jdbc")
+      .option("url", jdbcUrl)
+      .option("dbtable", table)
+      .option("createTableColumnTypes", JdbcDtypeMap)
+      .mode("append").save()
 
   /** Idempotent batch append into a JDBC table, keyed by `batchId`: any
     * rows a previous (crashed, replayed) attempt of the SAME batch left
@@ -222,12 +238,7 @@ object Pipeline {
         finally st.close()
       }
     } finally conn.close()
-    df.withColumn("batch_id", lit(batchId))
-      .write.format("jdbc")
-      .option("url", jdbcUrl)
-      .option("dbtable", table)
-      .option("createTableColumnTypes", JdbcDtypeMap)
-      .mode("append").save()
+    loadToSink(df.withColumn("batch_id", lit(batchId)), jdbcUrl, table)
   }
 
   /** The FUSED pipeline the reference runs as two Airflow DAGs with an S3
@@ -235,52 +246,16 @@ object Pipeline {
     * dag.py:61-69 + load_db.py:49-58 loading): file arrival → transform
     * chain → JDBC append, as ONE streaming query — the intermediate TSV
     * landing zone disappears because lineage replaces the XCom handoff.
-    * Same file-source semantics as [[startStream]] (one file per
-    * micro-batch, archive-on-completion, checkpointed exactly-once file
-    * consumption across restarts); the sink is the idempotent JDBC append
-    * above, so the whole leg is exactly-once END TO END: the checkpoint
-    * deduplicates files across restarts, the batch-id key deduplicates
-    * rows across micro-batch replays.
+    * [[transformLeg]] with the idempotent JDBC append as its sink, so the
+    * whole leg is exactly-once END TO END: the checkpoint deduplicates
+    * files across restarts, the batch-id key deduplicates rows across
+    * micro-batch replays.
     */
   def startJdbcLoadStream(spark: SparkSession, rawDir: String,
       jdbcUrl: String, table: String, archiveDir: String, checkpoint: String,
       dumpDate: String,
-      trigger: Trigger = Trigger.AvailableNow()): StreamingQuery = {
-    val raw = spark.readStream
-      .schema(PropertySchema.raw)
-      .option("sep", "\t")
-      .option("header", "true")
-      .option("multiLine", "true")
-      .option("pathGlobFilter", "*.csv")
-      .option("maxFilesPerTrigger", 1)
-      .option("cleanSource", "archive")
-      .option("sourceArchiveDir", archiveDir)
-      .csv(rawDir)
-    raw.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        jdbcIdempotentAppend(Transform(batch, dumpDate), jdbcUrl, table,
-          batchId)
-      }
-      .option("checkpointLocation", checkpoint)
-      .trigger(trigger)
-      .start()
-  }
-
-  /** JDBC append sink (the reference's load stage, scripts/load_db.py:32-47)
-    * behind an interface: no Postgres exists in the test environment, so
-    * the default sink is parquet; with a URL this writes via Spark's JDBC
-    * writer (one connection per partition — parallel, unlike the
-    * reference's single connection).
-    */
-  def loadToSink(df: DataFrame, jdbcUrl: Option[String], table: String,
-      parquetFallback: String): Unit = jdbcUrl match {
-    case Some(url) =>
-      df.write.format("jdbc")
-        .option("url", url)
-        .option("dbtable", table)
-        .option("createTableColumnTypes", JdbcDtypeMap)
-        .mode("append").save()
-    case None =>
-      df.write.mode("append").parquet(parquetFallback)
-  }
+      trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
+    transformLeg(spark, rawDir, archiveDir, checkpoint, dumpDate, trigger) {
+      (df, batchId) => jdbcIdempotentAppend(df, jdbcUrl, table, batchId)
+    }
 }

@@ -42,8 +42,13 @@ object Transform {
       dedupOrder: Option[Column] = None): DataFrame = {
     val strCols = raw.schema.fields.filter(_.dataType.typeName == "string").map(_.name)
 
+    // per-row source file, taken in the scan stage: above the dedup's
+    // shuffle input_file_name() no longer knows the file and returns ''
+    val scanned = fileName.fold(
+      raw.withColumn("file_name", Parse.baseName(input_file_name())))(_ => raw)
+
     // unidecode at extract time (scripts/extract.py:45), every string column.
-    val translit = strCols.foldLeft(raw) { (d, c) =>
+    val translit = strCols.foldLeft(scanned) { (d, c) =>
       d.withColumn(c, Transliterate(col(c)))
     }
 
@@ -78,10 +83,6 @@ object Transform {
       d.withColumn(c, Parse.normalizeNbsp(col(c)))
     }
 
-    val lineage = fileName
-      .map(n => lit(n))
-      .getOrElse(Parse.baseName(input_file_name()))
-
     normalized
       // currency filter: drop Slovak EUR listings (scripts/transform.py:66)
       .filter(!col("price_czk").contains("EUR"))
@@ -112,7 +113,7 @@ object Transform {
       .filter(Parse.keepLandCap(col("purpose"), col("price_per_m2")))
       // batch metadata (scripts/transform.py:106-112)
       .withColumn("dump_date", lit(dumpDate))
-      .withColumn("file_name", lineage)
+      .withColumn("file_name", fileName.fold(col("file_name"))(lit))
       // canonical column order (scripts/transform.py:115-116)
       .select(PropertySchema.transformed.fieldNames.map(col).toIndexedSeq: _*)
   }

@@ -3,6 +3,7 @@ package graft.etl
 import java.sql.DriverManager
 
 import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.functions.lit
 import org.apache.spark.sql.types._
 
 import graft.SparkSpec
@@ -14,8 +15,8 @@ import graft.schema.PropertySchema
   * (scripts/load_db.py:32-47: `to_sql('properties_data', if_exists='append',
   * dtype={...VARCHAR(255)/INTEGER...})`) with a driven writer rather than a
   * parquet stand-in: create-on-first-append, dtype mapping, append
-  * accumulation across batches, and round-trip value equality via
-  * `spark.read.jdbc`.
+  * accumulation across batches, NULLs in mapped columns, and round-trip
+  * value equality via `spark.read.jdbc`.
   *
   * Not oracle-able (DuckDB cannot read Derby) — spec-pinned per the driver
   * contract for sink semantics.
@@ -37,7 +38,7 @@ class JdbcSinkSpec extends SparkSpec {
 
   test("loadToSink(jdbc): first append creates properties_data with the dtype map") {
     val df = rows("/a", "/b", "/c")
-    Pipeline.loadToSink(df, Some(url), "properties_data", parquetFallback = "")
+    Pipeline.loadToSink(df, url, "properties_data")
 
     // Assert the reference's dtype map landed (load_db.py:35-46): the mapped
     // string columns are VARCHAR(255); unmapped ints follow Spark's JDBC
@@ -63,10 +64,8 @@ class JdbcSinkSpec extends SparkSpec {
   test("loadToSink(jdbc): mode=append accumulates across batches; values round-trip") {
     // self-contained: both batches land here, in a table the create test
     // never touches, so this test survives -z filtering and reordering
-    Pipeline.loadToSink(rows("/a", "/b", "/c"), Some(url), "properties_acc",
-      parquetFallback = "")
-    Pipeline.loadToSink(rows("/d", "/e"), Some(url), "properties_acc",
-      parquetFallback = "")
+    Pipeline.loadToSink(rows("/a", "/b", "/c"), url, "properties_acc")
+    Pipeline.loadToSink(rows("/d", "/e"), url, "properties_acc")
 
     val back = spark.read.jdbc(url, "properties_acc",
       new java.util.Properties())
@@ -84,13 +83,17 @@ class JdbcSinkSpec extends SparkSpec {
   }
 
   test("loadToSink(jdbc): NULL in a nullable mapped column survives the sink") {
-    val withNull = rows("/n").withColumn("price_per_m2",
-      org.apache.spark.sql.functions.lit(null).cast(IntegerType))
-    Pipeline.loadToSink(withNull, Some(url), "properties_null",
-      parquetFallback = "")
+    // a NULL string too (an empty `design` cell): it must bind as VARCHAR,
+    // not as the CLOB Derby rejects for a VARCHAR(255) column
+    val withNull = rows("/n")
+      .withColumn("price_per_m2", lit(null).cast(IntegerType))
+      .withColumn("design", lit(null).cast(StringType))
+    Pipeline.loadToSink(withNull, url, "properties_null")
     val back = spark.read.jdbc(url, "properties_null",
       new java.util.Properties())
     val r = back.collect().head
     assert(r.isNullAt(back.schema.fieldIndex("price_per_m2")))
+    assert(r.isNullAt(back.schema.fieldIndex("design")))
+    assert(r.getString(back.schema.fieldIndex("link")) == "/n")
   }
 }

@@ -70,7 +70,12 @@ class PipelineSpec extends SparkSpec {
     val q = Pipeline.startStream(spark, s"$root/raw", s"$root/out",
       s"$root/archive", s"$root/ckpt", dumpDate = "2026_08_12_080000")
     q.awaitTermination(120000)
-    assert(spark.read.parquet(s"$root/out").count() == 4)
+    val out = spark.read.parquet(s"$root/out")
+    assert(out.count() == 4)
+    // per-row lineage: each row names the file it came from
+    assert(out.select("link", "file_name").as[(String, String)].collect().toSet ==
+      Set("/a" -> "raw_properties_2.csv", "/k" -> "raw_properties_2.csv",
+        "/b2" -> "raw_properties_3.csv", "/k2" -> "raw_properties_3.csv"))
     val remaining = Files.list(Paths.get(s"$root/raw")).toArray
       .map(_.toString).count(_.endsWith(".csv"))
     assert(remaining <= 1, s"expected all but the in-flight file archived, $remaining remain")

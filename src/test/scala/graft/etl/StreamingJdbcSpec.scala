@@ -3,6 +3,8 @@ package graft.etl
 import java.nio.file.{Files, Paths}
 import java.sql.DriverManager
 
+import org.apache.spark.sql.functions.lit
+
 import graft.SparkSpec
 
 /** The FUSED pipeline across a restart: file arrival → transform chain →
@@ -24,15 +26,22 @@ class StreamingJdbcSpec extends SparkSpec {
 
   private val url = "jdbc:derby:memory:graft_stream_jdbc;create=true"
 
+  // linkB's design is a quoted value spanning two lines: the stream source
+  // must read it as one record (multiLine), as readRaw does
   private def rawTsv(linkA: String, linkB: String): String =
     "purpose\taddress\tsize_m2\tdesign\tprice_czk\tlink\n" +
       s"Prodej bytu\tVinohradska 12, Praha\t80 m2\t3+1\t5 000 000 Kc\t$linkA\n" +
-      s"Pronajem bytu\tNamesti Svobody 5, Brno, Jihomoravsky kraj\t100 m2\t2+kk\t900 Kc\t$linkB\n"
+      s"Pronajem bytu\tNamesti Svobody 5, Brno, Jihomoravsky kraj\t100 m2\t\"2+kk\nbalkon\"\t900 Kc\t$linkB\n"
 
   private def tableLinks(table: String): Seq[String] = {
     val back = spark.read.jdbc(url, table, new java.util.Properties())
     back.select("link").collect().map(_.getString(0)).toSeq.sorted
   }
+
+  /** link → value of column `c`, over the whole table. */
+  private def byLink(table: String, c: String): Map[String, String] =
+    spark.read.jdbc(url, table, new java.util.Properties())
+      .select("link", c).collect().map(r => r.getString(0) -> r.getString(1)).toMap
 
   test("fused stream → Derby: exactly-once across restart and batch replay") {
     val root = Files.createTempDirectory("graft_sjdbc").toString
@@ -46,6 +55,7 @@ class StreamingJdbcSpec extends SparkSpec {
       s"$root/archive", s"$root/ckpt", dumpDate = "2026_08_12_080000")
     q1.awaitTermination(120000)
     assert(tableLinks(table) == Seq("/a", "/k"))
+    assert(byLink(table, "design") == Map("/a" -> "3+1", "/k" -> "2+kk\nbalkon"))
 
     // run 2: a new file arrives; a NEW query on the SAME checkpoint must
     // load only it — file 1 is consumed state, not re-read, so its rows
@@ -80,6 +90,11 @@ class StreamingJdbcSpec extends SparkSpec {
     val n2 = spark.read.jdbc(url, table, new java.util.Properties())
       .filter(org.apache.spark.sql.functions.col("batch_id") === b2).count()
     assert(n2 == 2L)
+
+    // per-row lineage survives the stream, the restart and the replay
+    assert(byLink(table, "file_name") == Map(
+      "/a" -> "raw_properties_1.csv", "/k" -> "raw_properties_1.csv",
+      "/b" -> "raw_properties_2.csv", "/m" -> "raw_properties_2.csv"))
   }
 
   test("jdbcIdempotentAppend: distinct batch ids accumulate, same id replaces") {
@@ -99,6 +114,12 @@ class StreamingJdbcSpec extends SparkSpec {
     // the delete must clear the stale half-write, not just dedup)
     Pipeline.jdbcIdempotentAppend(mk("/x2"), url, table, batchId = 1L)
     assert(tableLinks(table) == Seq("/x1", "/x2"))
+    // a NULL string (an empty `design` cell) must not fail the batch
+    Pipeline.jdbcIdempotentAppend(
+      mk("/x4").withColumn("design", lit(null).cast("string")), url, table,
+      batchId = 2L)
+    assert(tableLinks(table) == Seq("/x1", "/x2", "/x4"))
+    assert(byLink(table, "design")("/x4") == null)
     val conn = DriverManager.getConnection(url)
     try {
       val rs = conn.createStatement()
