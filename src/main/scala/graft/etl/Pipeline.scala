@@ -1,6 +1,7 @@
 package graft.etl
 
-import java.sql.Types
+import java.sql.{Connection, DriverManager, Types}
+import java.util.Locale
 
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -107,13 +108,27 @@ object Pipeline {
     * (2) scale — streaming dropDuplicates keeps one state row per distinct
     *     link FOREVER (unbounded state growth); per-batch dedup holds no
     *     standing state at all.
+    *
+    * Each micro-batch is rebuilt in the caller's session before the
+    * transform. A started query runs its batches in a clone of the session
+    * with a session id of its own, and executors load generated classes
+    * through one classloader per session id; Spark's compiled-code cache is
+    * keyed on that classloader as well as on the source. In the clone,
+    * every restart of the leg (each daily AvailableNow run) compiled all of
+    * the day's executor-side code again: 17 of the 23 classes a traced day
+    * compiled. In the caller's session every batch of every run reuses the
+    * classes the first batch compiled (and runs under that session's
+    * current SQL settings, not the clone's copy of them). The sink must
+    * keep per-batch values out of the generated source for the same reason
+    * (see [[jdbcIdempotentAppend]]).
     */
   private def transformLeg(spark: SparkSession, rawDir: String,
       archiveDir: String, checkpoint: String, dumpDate: String,
       trigger: Trigger)(sink: (DataFrame, Long) => Unit): StreamingQuery =
     arrivals(spark, PropertySchema.raw, rawDir, archiveDir).writeStream
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        sink(Transform(batch, dumpDate), batchId)
+        val rebuilt = spark.createDataFrame(batch.rdd, batch.schema)
+        sink(Transform(rebuilt, dumpDate), batchId)
       }
       .option("checkpointLocation", checkpoint)
       .trigger(trigger)
@@ -220,25 +235,57 @@ object Pipeline {
     * keyed by the replay-stable batchId makes the retry idempotent —
     * EXACTLY-once accumulation no matter how often the batch replays.
     * (The delete is a no-op on the happy path and on first creation.)
+    *
+    * The delete is one statement text with the id bound as a parameter,
+    * so the database compiles it once, and it probes an index on
+    * "batch_id" (created here if the table lacks it) instead of scanning
+    * the whole table on every batch.
+    *
+    * batch_id is stamped by a zero-argument UDF, not `lit(batchId)`:
+    * codegen writes a long literal into the Java source, so every batch's
+    * post-shuffle stage would be a new class, compiled on the driver and
+    * again on the executor. The UDF's value reaches the generated code as
+    * a reference, and the column stays BIGINT NOT NULL.
     */
   def jdbcIdempotentAppend(df: DataFrame, jdbcUrl: String, table: String,
       batchId: Long): Unit = {
-    val conn = java.sql.DriverManager.getConnection(jdbcUrl)
+    val conn = DriverManager.getConnection(jdbcUrl)
     try {
       val meta = conn.getMetaData.getTables(null, null,
-        table.toUpperCase(java.util.Locale.ROOT), null)
-      val exists = try meta.next() finally meta.close()
-      if (exists) {
-        val st = conn.createStatement()
+        table.toUpperCase(Locale.ROOT), null)
+      val existed = try meta.next() finally meta.close()
+      if (existed) {
+        ensureBatchIndex(conn, table)
         // Spark's JDBC writer QUOTES column identifiers at create time, so
         // the column is case-sensitive lowercase "batch_id" — an unquoted
         // reference would normalize to BATCH_ID and miss it
-        try st.executeUpdate(
-          s"""DELETE FROM $table WHERE "batch_id" = $batchId""")
+        val st = conn.prepareStatement(
+          s"""DELETE FROM $table WHERE "batch_id" = ?""")
+        try { st.setLong(1, batchId); st.executeUpdate() }
         finally st.close()
       }
+      val stamp = udf(() => batchId)
+      loadToSink(df.withColumn("batch_id", stamp()), jdbcUrl, table)
+      if (!existed) ensureBatchIndex(conn, table)
     } finally conn.close()
-    loadToSink(df.withColumn("batch_id", lit(batchId)), jdbcUrl, table)
+  }
+
+  /** Creates an index on "batch_id" unless one already leads with it. */
+  private def ensureBatchIndex(conn: Connection, table: String): Unit = {
+    val rs = conn.getMetaData.getIndexInfo(null, null,
+      table.toUpperCase(Locale.ROOT), false, true)
+    val indexed = try {
+      Iterator.continually(rs.next()).takeWhile(identity).exists { _ =>
+        rs.getString("COLUMN_NAME") == "batch_id" &&
+          rs.getShort("ORDINAL_POSITION") == 1
+      }
+    } finally rs.close()
+    if (!indexed) {
+      val st = conn.createStatement()
+      try st.executeUpdate(
+        s"""CREATE INDEX ${table}_batch_id ON $table ("batch_id")""")
+      finally st.close()
+    }
   }
 
   /** The FUSED pipeline the reference runs as two Airflow DAGs with an S3

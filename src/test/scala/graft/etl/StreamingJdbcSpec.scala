@@ -3,6 +3,7 @@ package graft.etl
 import java.nio.file.{Files, Paths}
 import java.sql.DriverManager
 
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.functions.lit
 
 import graft.SparkSpec
@@ -21,6 +22,9 @@ import graft.SparkSpec
   *      with the same batchId (what foreachBatch does after a crash
   *      between the JDBC append and the offset commit) must leave the
   *      table unchanged (delete-then-append keyed by batch_id).
+  *
+  * A restarted leg must also reuse the generated code of the previous run:
+  * the daily cadence restarts the query every day.
   */
 class StreamingJdbcSpec extends SparkSpec {
 
@@ -97,28 +101,52 @@ class StreamingJdbcSpec extends SparkSpec {
       "/b" -> "raw_properties_2.csv", "/m" -> "raw_properties_2.csv"))
   }
 
+  test("a restarted load stream compiles no new code") {
+    val root = Files.createTempDirectory("graft_sjdbc_codegen").toString
+    Files.createDirectories(Paths.get(s"$root/raw"))
+    val table = "properties_restart"
+    def land(n: Int): Unit =
+      Files.writeString(Paths.get(s"$root/raw/raw_properties_$n.csv"),
+        rawTsv(s"/r$n", s"/s$n"))
+    def run(dumpDate: String): Unit =
+      Pipeline.startJdbcLoadStream(spark, s"$root/raw", url, table,
+        s"$root/archive", s"$root/ckpt", dumpDate).awaitTermination(120000)
+
+    // run 1 compiles what a micro-batch needs; run 2 is a new query on the
+    // same checkpoint with new files, batch ids and dump date, like the
+    // next day's run, and must reuse all of it
+    land(1); land(2)
+    run("2026_08_12_080000")
+    land(3); land(4)
+    val before = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    run("2026_08_13_080000")
+    val compiled = CodegenMetrics.METRIC_COMPILATION_TIME.getCount - before
+    assert(compiled == 0L, s"the restarted stream compiled $compiled classes")
+
+    // each run's two files were two micro-batches, every row keeps its file
+    assert(byLink(table, "file_name") == (1 to 4).flatMap(n =>
+      Seq(s"/r$n", s"/s$n").map(_ -> s"raw_properties_$n.csv")).toMap)
+    val batches = spark.read.jdbc(url, table, new java.util.Properties())
+      .select("batch_id").distinct().count()
+    assert(batches == 4L)
+  }
+
   test("jdbcIdempotentAppend: distinct batch ids accumulate, same id replaces") {
     val table = "properties_batches"
-    def mk(links: String*) = {
-      import spark.implicits._
-      val raw = links.map(l =>
-        ("Prodej bytu", "Vinohradska 12, Praha", "80 m2", "3+1",
-          "5 000 000 Kc", l))
-        .toDF("purpose", "address", "size_m2", "design", "price_czk", "link")
-      Transform(raw, "2026_08_12_080000")
-    }
     Pipeline.jdbcIdempotentAppend(mk("/x1"), url, table, batchId = 0L)
     Pipeline.jdbcIdempotentAppend(mk("/x2", "/x3"), url, table, batchId = 1L)
-    assert(tableLinks(table) == Seq("/x1", "/x2", "/x3"))
+    Pipeline.jdbcIdempotentAppend(mk("/x5"), url, table, batchId = 2L)
+    assert(tableLinks(table) == Seq("/x1", "/x2", "/x3", "/x5"))
     // same id replaces (crash-replay with DIFFERENT surviving rows —
-    // the delete must clear the stale half-write, not just dedup)
+    // the delete must clear the stale half-write, not just dedup); the
+    // batches before and after the replayed one keep their rows
     Pipeline.jdbcIdempotentAppend(mk("/x2"), url, table, batchId = 1L)
-    assert(tableLinks(table) == Seq("/x1", "/x2"))
+    assert(tableLinks(table) == Seq("/x1", "/x2", "/x5"))
     // a NULL string (an empty `design` cell) must not fail the batch
     Pipeline.jdbcIdempotentAppend(
       mk("/x4").withColumn("design", lit(null).cast("string")), url, table,
-      batchId = 2L)
-    assert(tableLinks(table) == Seq("/x1", "/x2", "/x4"))
+      batchId = 3L)
+    assert(tableLinks(table) == Seq("/x1", "/x2", "/x4", "/x5"))
     assert(byLink(table, "design")("/x4") == null)
     val conn = DriverManager.getConnection(url)
     try {
@@ -126,6 +154,47 @@ class StreamingJdbcSpec extends SparkSpec {
         .executeQuery(s"""SELECT count(*) FROM $table WHERE "batch_id" = 1""")
       rs.next()
       assert(rs.getInt(1) == 1)
+      // the table the sink created keys its rows by a BIGINT NOT NULL id
+      val c = conn.getMetaData.getColumns(null, null, table.toUpperCase, "batch_id")
+      assert(c.next())
+      assert(c.getString("TYPE_NAME") == "BIGINT")
+      assert(c.getInt("NULLABLE") == java.sql.DatabaseMetaData.columnNoNulls)
+      assert(batchIdIndexed(conn, table))
     } finally conn.close()
+  }
+
+  test("jdbcIdempotentAppend indexes batch_id on a table made without it") {
+    val table = "properties_unindexed"
+    val conn = DriverManager.getConnection(url)
+    try {
+      conn.createStatement().executeUpdate(
+        s"""CREATE TABLE $table ("purpose" VARCHAR(255),
+           |"address" VARCHAR(255), "region" VARCHAR(255),
+           |"size_m2" INTEGER NOT NULL, "design" VARCHAR(255),
+           |"price_czk" BIGINT NOT NULL, "price_per_m2" INTEGER,
+           |"link" VARCHAR(255), "dump_date" VARCHAR(255),
+           |"file_name" VARCHAR(255), "batch_id" BIGINT NOT NULL)""".stripMargin)
+      assert(!batchIdIndexed(conn, table))
+      Pipeline.jdbcIdempotentAppend(mk("/u1"), url, table, batchId = 7L)
+      assert(batchIdIndexed(conn, table))
+      assert(tableLinks(table) == Seq("/u1"))
+    } finally conn.close()
+  }
+
+  /** One transformed row per link (a raw row that passes every rule). */
+  private def mk(links: String*) = {
+    import spark.implicits._
+    val raw = links.map(l =>
+      ("Prodej bytu", "Vinohradska 12, Praha", "80 m2", "3+1",
+        "5 000 000 Kc", l))
+      .toDF("purpose", "address", "size_m2", "design", "price_czk", "link")
+    Transform(raw, "2026_08_12_080000")
+  }
+
+  private def batchIdIndexed(conn: java.sql.Connection, table: String): Boolean = {
+    val rs = conn.getMetaData.getIndexInfo(null, null, table.toUpperCase, false, true)
+    try Iterator.continually(rs.next()).takeWhile(identity)
+      .exists(_ => rs.getString("COLUMN_NAME") == "batch_id")
+    finally rs.close()
   }
 }
