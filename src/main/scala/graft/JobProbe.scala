@@ -17,10 +17,7 @@ object JobProbe {
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)
     val names = args(1).split(",").toSeq
-    // GRAFT_CPUS mirrors the bench's SPARK_GRAFT_CPUS (master AND shuffle
-    // partitions track it) so the c8-vs-c32 negative-scaling comparison
-    // (VERDICT r14 next #1) probes under the exact bench session shape.
-    val cpus = sys.env.getOrElse("GRAFT_CPUS", "32")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)

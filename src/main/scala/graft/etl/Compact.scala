@@ -122,7 +122,7 @@ object Compact {
     * already compact. Returns the resulting file count.
     *
     * Write-then-publish: the next `v=N+1/` directory is written COMPLETELY,
-    * then its `_READY` marker is created ([[publish]]) — readers at ANY
+    * then its `_READY` marker is created ([[publishVersion]]) — readers at ANY
     * instant resolve to a complete directory (old or new, never missing or
     * half-written). Superseded data (previous version directories, or a
     * migrated plain directory's loose files) is NOT deleted in the same
@@ -174,12 +174,8 @@ object Compact {
       math.ceil(totalBytes.toDouble / targetFileBytes).toInt)
     if (nFiles <= targetFiles) nFiles
     else {
-      val nextV = (vs.map(_._1) :+ 0L).max + 1
       spark.catalog.refreshByPath(cur)
-      spark.read.parquet(cur)
-        .repartition(targetFiles)
-        .write.mode(SaveMode.Overwrite).parquet(s"$base/v=$nextV")
-      publish(spark, dir, nextV)
+      publishVersion(spark, spark.read.parquet(cur).repartition(targetFiles), dir)
       targetFiles
     }
   }

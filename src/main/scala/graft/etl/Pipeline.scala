@@ -11,6 +11,7 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types.{DataType, StringType, StructType}
 
 import graft.schema.PropertySchema
+import graft.streaming.MicroBatch
 
 /** The reference's orchestration semantics (SURVEY.md §2.10) re-expressed
   * with Spark file sources.
@@ -98,7 +99,8 @@ object Pipeline {
       .option("sourceArchiveDir", archiveDir)
       .csv(dir)
 
-  /** Raw file arrival → [[Transform]] → `sink(transformed, batchId)`.
+  /** Raw file arrival → [[Transform]] → `sink(transformed, batchId)`,
+    * started through [[graft.streaming.MicroBatch.start]].
     *
     * foreachBatch applies the BATCH transform per micro-batch (= per file
     * with maxFilesPerTrigger=1). Two reasons over a streaming Transform:
@@ -108,31 +110,15 @@ object Pipeline {
     * (2) scale — streaming dropDuplicates keeps one state row per distinct
     *     link FOREVER (unbounded state growth); per-batch dedup holds no
     *     standing state at all.
-    *
-    * Each micro-batch is rebuilt in the caller's session before the
-    * transform. A started query runs its batches in a clone of the session
-    * with a session id of its own, and executors load generated classes
-    * through one classloader per session id; Spark's compiled-code cache is
-    * keyed on that classloader as well as on the source. In the clone,
-    * every restart of the leg (each daily AvailableNow run) compiled all of
-    * the day's executor-side code again: 17 of the 23 classes a traced day
-    * compiled. In the caller's session every batch of every run reuses the
-    * classes the first batch compiled (and runs under that session's
-    * current SQL settings, not the clone's copy of them). The sink must
-    * keep per-batch values out of the generated source for the same reason
-    * (see [[jdbcIdempotentAppend]]).
     */
   private def transformLeg(spark: SparkSession, rawDir: String,
       archiveDir: String, checkpoint: String, dumpDate: String,
       trigger: Trigger)(sink: (DataFrame, Long) => Unit): StreamingQuery =
-    arrivals(spark, PropertySchema.raw, rawDir, archiveDir).writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val rebuilt = spark.createDataFrame(batch.rdd, batch.schema)
-        sink(Transform(rebuilt, dumpDate), batchId)
-      }
-      .option("checkpointLocation", checkpoint)
-      .trigger(trigger)
-      .start()
+    MicroBatch.start(
+        arrivals(spark, PropertySchema.raw, rawDir, archiveDir),
+        checkpoint, trigger) { (batch, batchId) =>
+      sink(Transform(batch, dumpDate), batchId)
+    }
 
   /** Streaming form of [[runBatch]]: [[transformLeg]] appending parquet.
     *

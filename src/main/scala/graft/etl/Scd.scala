@@ -1,9 +1,12 @@
 package graft.etl
 
-import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
+import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types.StructType
+
+import graft.streaming.MicroBatch
 
 /** Slowly-changing-dimension maintenance — the warehouse-load step the
   * reference's JDBC append (scripts/load_db.py:24-58) gestures at without
@@ -105,15 +108,16 @@ object Scd {
   }
 
   /** Streaming merge-on-ingest: a continuously-maintained type-2 dimension.
-    * Each arriving update file is one micro-batch; foreachBatch reads the
-    * CURRENT dimension version ([[Compact.read]]), applies [[mergeType2]]
-    * with the batch id as a synthetic batch date, writes the merged
-    * dimension COMPLETELY into the next `v=N/` directory, and publishes it
-    * with a create-once `_READY` marker ([[Compact.publish]]) — so a
-    * concurrent dimension reader sees the previous or the next complete
-    * version at every instant, never a partial merge. This composes three
-    * engine pieces into the standard warehouse ingestion loop: streaming
-    * file arrival → versioned SCD2 history → atomic reader-safe publish.
+    * Each arriving update file is one micro-batch
+    * ([[graft.streaming.MicroBatch.start]]) that reads the CURRENT
+    * dimension version ([[Compact.read]]), applies [[mergeType2]] with the
+    * batch id as a synthetic batch date, and publishes the merged dimension
+    * as the next `v=N/` version ([[Compact.publishVersion]]: written
+    * COMPLETELY, then marked with a create-once `_READY`) — so a concurrent
+    * dimension reader sees the previous or the next complete version at
+    * every instant, never a partial merge. This composes three engine
+    * pieces into the standard warehouse ingestion loop: streaming file
+    * arrival → versioned SCD2 history → atomic reader-safe publish.
     *
     * foreachBatch (not a streaming join) because the merge must read its
     * OWN previous output — a feedback edge streaming DAGs can't express —
@@ -131,39 +135,20 @@ object Scd {
       .schema(updateSchema)
       .option("maxFilesPerTrigger", 1)
       .parquet(updatesDir)
-    updates.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val sess = batch.sparkSession
-        val base = dimDir.stripSuffix("/")
-        val fs = new org.apache.hadoop.fs.Path(base)
-          .getFileSystem(sess.sparkContext.hadoopConfiguration)
-        val hasDim = fs.exists(new org.apache.hadoop.fs.Path(base))
-        val dim =
-          if (hasDim) Compact.read(sess, base)
-          else {
-            // empty bootstrap dimension with the output schema
-            val empty = batch.select(
-              (keyCols ++ attrCols).map(col) ++ Seq(
-                lit("").as("valid_from"),
-                lit(null).cast("string").as("valid_to"),
-                lit(true).as("is_current")): _*).limit(0)
-            empty
-          }
-        val batchDate = java.time.LocalDate.parse(baseDate)
-          .plusDays(batchId).toString
-        val merged = mergeType2(dim, batch, keyCols, attrCols, batchDate)
-        // next version = max existing + 1 (replayed batches overwrite
-        // their own unpublished dir harmlessly; Compact GCs failed writes)
-        val nextV = if (!hasDim) 1L
-        else (fs.listStatus(new org.apache.hadoop.fs.Path(base)).collect {
-          case s if s.isDirectory && s.getPath.getName.matches("^v=\\d+$") =>
-            s.getPath.getName.stripPrefix("v=").toLong
-        } :+ 0L).max + 1
-        merged.write.mode(SaveMode.Overwrite).parquet(s"$base/v=$nextV")
-        Compact.publish(sess, base, nextV)
-      }
-      .option("checkpointLocation", checkpoint)
-      .trigger(trigger)
-      .start()
+    val dimPath = new Path(dimDir)
+    val fs = dimPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    MicroBatch.start(updates, checkpoint, trigger) { (batch, batchId) =>
+      val dim =
+        if (fs.exists(dimPath)) Compact.read(spark, dimDir)
+        else // empty bootstrap dimension with the output schema
+          batch.select((keyCols ++ attrCols).map(col) ++ Seq(
+            lit("").as("valid_from"),
+            lit(null).cast("string").as("valid_to"),
+            lit(true).as("is_current")): _*).limit(0)
+      val batchDate = java.time.LocalDate.parse(baseDate)
+        .plusDays(batchId).toString
+      Compact.publishVersion(spark,
+        mergeType2(dim, batch, keyCols, attrCols, batchDate), dimDir)
+    }
   }
 }

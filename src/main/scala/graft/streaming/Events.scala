@@ -169,13 +169,14 @@ object Events {
     * windowed count — the streaming "trending items" shape, computed by
     * the custom heap operator (graft.plans.TopK), not a ranking window.
     *
-    * Compose inside foreachBatch on an APPEND-mode stream: append mode
-    * emits each window exactly once, when the watermark closes it, so the
-    * per-micro-batch top-k IS the exact per-window top-k — no cross-batch
-    * state beyond what the windowed aggregation already keeps:
+    * Compose inside a micro-batch body on an APPEND-mode stream (the
+    * runner's output mode): append mode emits each window exactly once,
+    * when the watermark closes it, so the per-micro-batch top-k IS the
+    * exact per-window top-k — no cross-batch state beyond what the
+    * windowed aggregation already keeps:
     *
-    *   streamingHourly(src).writeStream.outputMode("append")
-    *     .foreachBatch((b, _) => sink(Events.topKPerWindow(b, 3)))
+    *   MicroBatch.start(streamingHourly(src), checkpoint, trigger) {
+    *     (b, _) => sink(Events.topKPerWindow(b, 3)) }
     */
   def topKPerWindow(windowCounts: DataFrame, k: Int): DataFrame =
     graft.plans.TopK.perGroup(

@@ -3,7 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.types.{StringType, StructField, StructType}
 
 import graft.llm.TextStats
 
@@ -41,16 +41,11 @@ object Ingest {
   def startDedupedIngest(spark: SparkSession, srcDir: String, schema: StructType,
       idCol: String, textCol: String, corpusDir: String, fpStoreDir: String,
       checkpoint: String,
-      trigger: Trigger = Trigger.AvailableNow()): StreamingQuery = {
-    val src = spark.readStream.schema(schema).parquet(srcDir)
-    src.writeStream
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        ingestBatch(batch, idCol, textCol, corpusDir, fpStoreDir)
-      }
-      .option("checkpointLocation", checkpoint)
-      .trigger(trigger)
-      .start()
-  }
+      trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
+    MicroBatch.start(spark.readStream.schema(schema).parquet(srcDir),
+        checkpoint, trigger) { (batch, _) =>
+      ingestBatch(batch, idCol, textCol, corpusDir, fpStoreDir)
+    }
 
   /** The NATIVE bounded-state alternative: content dedup via
     * `dropDuplicatesWithinWatermark` on the text fingerprint. State is
@@ -100,22 +95,19 @@ object Ingest {
     *                        semantics: 1 — one page per paced request)
     * @param interval        minimum spacing between micro-batch starts,
     *                        e.g. "2 seconds" for the reference's throttle
-    * @param sink            per-batch action (same contract as
-    *                        foreachBatch)
+    * @param sink            per-batch action: the batch, re-planned in
+    *                        `spark` ([[MicroBatch.start]]), and its id
     */
   def startRateLimitedIngest(spark: SparkSession, srcDir: String,
       schema: StructType, filesPerTrigger: Int, interval: String,
       checkpoint: String)(sink: (DataFrame, Long) => Unit): StreamingQuery = {
     require(filesPerTrigger >= 1,
       s"filesPerTrigger must be >= 1, got $filesPerTrigger")
-    spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", filesPerTrigger)
-      .parquet(srcDir)
-      .writeStream
-      .foreachBatch(sink)
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.ProcessingTime(interval))
-      .start()
+    MicroBatch.start(
+        spark.readStream.schema(schema)
+          .option("maxFilesPerTrigger", filesPerTrigger)
+          .parquet(srcDir),
+        checkpoint, Trigger.ProcessingTime(interval))(sink)
   }
 
   /** One micro-batch of the deduped ingest (also usable for backfills). */
@@ -130,14 +122,9 @@ object Ingest {
       .groupBy(col("__fp"))
       .agg(min_by(struct(cols.map(col): _*), col(idCol)).as("__r"))
       .select(col("__fp") +: cols.map(c => col(s"__r.$c").as(c)): _*)
-    val known =
-      try spark.read.parquet(fpStoreDir).select(col("fp").as("__fp"))
-      catch {
-        case _: org.apache.spark.sql.AnalysisException =>
-          spark.createDataFrame(new java.util.ArrayList[org.apache.spark.sql.Row](),
-            StructType(Seq(org.apache.spark.sql.types.StructField("__fp",
-              org.apache.spark.sql.types.StringType))))
-      }
+    val known = MicroBatch.readStore(spark, fpStoreDir,
+        StructType(Seq(StructField("fp", StringType))))
+      .select(col("fp").as("__fp"))
     val fresh = localDedup.join(known, Seq("__fp"), "left_anti").persist()
     try {
       // corpus first (see delivery note): replay after a mid-crash

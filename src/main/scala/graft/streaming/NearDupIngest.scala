@@ -46,32 +46,18 @@ object NearDupIngest {
       b => concat_ws(":", b.getField("band"),
         array_join(b.getField("vals").cast("array<string>"), ",")))
 
-  private def readOr(spark: SparkSession, dir: String,
-      schema: StructType): DataFrame =
-    try spark.read.parquet(dir)
-    catch {
-      case _: org.apache.spark.sql.AnalysisException =>
-        spark.createDataFrame(
-          new java.util.ArrayList[org.apache.spark.sql.Row](), schema)
-    }
-
   /** Start the near-dup-deduped ingest over a parquet file-arrival source. */
   def startNearDupIngest(spark: SparkSession, srcDir: String,
       schema: StructType, idCol: String, textCol: String, corpusDir: String,
       sigStoreDir: String, bandStoreDir: String, checkpoint: String,
       numHashes: Int = 64, numBands: Int = 16, minJaccard: Double = 0.5,
       shingleK: Int = 3,
-      trigger: Trigger = Trigger.AvailableNow()): StreamingQuery = {
-    val src = spark.readStream.schema(schema).parquet(srcDir)
-    src.writeStream
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        ingestBatch(batch, idCol, textCol, corpusDir, sigStoreDir,
-          bandStoreDir, numHashes, numBands, minJaccard, shingleK)
-      }
-      .option("checkpointLocation", checkpoint)
-      .trigger(trigger)
-      .start()
-  }
+      trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
+    MicroBatch.start(spark.readStream.schema(schema).parquet(srcDir),
+        checkpoint, trigger) { (batch, _) =>
+      ingestBatch(batch, idCol, textCol, corpusDir, sigStoreDir,
+        bandStoreDir, numHashes, numBands, minJaccard, shingleK)
+    }
 
   /** One micro-batch of the near-dup ingest (also usable for backfills). */
   def ingestBatch(batch: DataFrame, idCol: String, textCol: String,
@@ -110,9 +96,9 @@ object NearDupIngest {
         .select(col("id").as("__id")), Seq("__id"))
 
     // cross-batch: band store proposes, signature store confirms
-    val storedBands = readOr(spark, bandStoreDir, StructType(Seq(
+    val storedBands = MicroBatch.readStore(spark, bandStoreDir, StructType(Seq(
       StructField("__bk", StringType), StructField("doc_id", LongType))))
-    val storedSigs = readOr(spark, sigStoreDir, StructType(Seq(
+    val storedSigs = MicroBatch.readStore(spark, sigStoreDir, StructType(Seq(
       StructField("doc_id", LongType),
       StructField("sig", org.apache.spark.sql.types.ArrayType(LongType)))))
     val cands = bk.join(storedBands, Seq("__bk"))

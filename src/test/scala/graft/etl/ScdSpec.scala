@@ -88,6 +88,53 @@ class ScdSpec extends SparkSpec {
     assert(new java.io.File(s"$dimDir/v=2", "_READY").isFile)
   }
 
+  test("startStreamingMerge: a later batch of one run merges into the version an earlier one published") {
+    val root = java.nio.file.Files.createTempDirectory("graft_scdrun").toString
+    val src = s"$root/updates"; val dimDir = s"$root/dim"
+    val schema = Seq.empty[(Long, String)].toDF("key", "attr").schema
+    // two update files drained by ONE run; the second is written later, so
+    // it is newer and one-file-per-batch admission takes it second
+    Seq((1L, "a"), (2L, "b")).toDF("key", "attr")
+      .coalesce(1).write.mode("append").parquet(src)
+    Seq((1L, "a2"), (3L, "c")).toDF("key", "attr")
+      .coalesce(1).write.mode("append").parquet(src)
+    Scd.startStreamingMerge(spark, src, schema, dimDir, Seq("key"),
+      Seq("attr"), "2024-01-01", s"$root/ckpt").awaitTermination()
+
+    val out = Compact.read(spark, dimDir)
+      .as[(Long, String, String, Option[String], Boolean)].collect()
+      .sortBy(r => (r._1, r._3))
+    assert(out.toSeq == Seq(
+      (1L, "a", "2024-01-01", Some("2024-01-02"), false), // closed
+      (1L, "a2", "2024-01-02", None, true),
+      (2L, "b", "2024-01-01", None, true),
+      (3L, "c", "2024-01-02", None, true))) // opened
+    assert(new java.io.File(s"$dimDir/v=1", "_READY").isFile)
+    assert(new java.io.File(s"$dimDir/v=2", "_READY").isFile)
+  }
+
+  test("a restarted streaming merge compiles no new code") {
+    val root = java.nio.file.Files.createTempDirectory("graft_scdcodegen").toString
+    val src = s"$root/updates"; val dimDir = s"$root/dim"
+    val schema = Seq.empty[(Long, String)].toDF("key", "attr").schema
+    // files touch distinct keys, so the result does not depend on which
+    // file of a run is admitted first
+    def land(rows: (Long, String)*): Unit =
+      rows.toDF("key", "attr").coalesce(1).write.mode("append").parquet(src)
+    def run(): Unit =
+      Scd.startStreamingMerge(spark, src, schema, dimDir, Seq("key"),
+        Seq("attr"), "2024-01-01", s"$root/ckpt").awaitTermination()
+
+    // run 1: a bootstrap batch (no dimension yet), then a merge batch
+    land((1L, "a"), (2L, "b")); land((3L, "c")); run()
+    land((1L, "a2")); land((4L, "d"))
+    val compiled = classesCompiledBy(run())
+    assert(compiled == 0L, s"the restarted merge compiled $compiled classes")
+    val current = Compact.read(spark, dimDir).filter(col("is_current"))
+      .select("key", "attr").as[(Long, String)].collect().sorted.toSeq
+    assert(current == Seq((1L, "a2"), (2L, "b"), (3L, "c"), (4L, "d")))
+  }
+
   test("snapshotDiff classifies added/removed/changed and hides unchanged by default") {
     val oldDf = Seq((1L, "a"), (2L, "b"), (3L, "c")).toDF("key", "v")
     val newDf = Seq((1L, "a"), (2L, "B"), (4L, "d")).toDF("key", "v")

@@ -49,6 +49,54 @@ class IngestSpec extends SparkSpec {
     assert(spark.read.parquet(corpus).count() == 3)
   }
 
+  test("a restarted deduped ingest compiles no new code") {
+    val root = Files.createTempDirectory("graft_ingest_codegen").toString
+    val src = s"$root/src"
+    val schema = Seq.empty[(Long, String)].toDF("doc_id", "text").schema
+    def land(ids: Long*): Unit =
+      ids.map(i => (i, s"document number $i")).toDF("doc_id", "text")
+        .coalesce(1).write.mode("append").parquet(src)
+    def run(): Unit =
+      Ingest.startDedupedIngest(spark, src, schema, "doc_id", "text",
+        s"$root/corpus", s"$root/fps", s"$root/ckpt").awaitTermination()
+
+    // run 1 finds no fingerprint store yet, so its anti-join side is a
+    // local empty relation; run 2 is the first to scan the store and
+    // compiles what every later restart needs
+    land(1, 2); land(3, 4); run()
+    land(5, 6); land(7, 8); run()
+    land(9, 10); land(11, 12)
+    val compiled = classesCompiledBy(run())
+    assert(compiled == 0L, s"the restarted ingest compiled $compiled classes")
+    assert(spark.read.parquet(s"$root/corpus").select("doc_id").as[Long]
+      .collect().sorted.toSeq == (1L to 12L))
+  }
+
+  test("rate-limited ingest: a later batch of one run sees what an earlier one stored") {
+    val root = Files.createTempDirectory("graft_ingest_ratelimit").toString
+    val src = s"$root/src"
+    val schema = Seq.empty[(Long, String)].toDF("doc_id", "text").schema
+    // two files with the same text; the second is written later, so it is
+    // newer and one-file-per-batch admission takes it second
+    for (id <- Seq(1L, 2L))
+      Seq((id, "the same listing text")).toDF("doc_id", "text")
+        .coalesce(1).write.mode("append").parquet(src)
+
+    val batches = new java.util.concurrent.ConcurrentLinkedQueue[Long]()
+    val q = Ingest.startRateLimitedIngest(spark, src, schema,
+      filesPerTrigger = 1, interval = "50 milliseconds",
+      checkpoint = s"$root/ckpt") { (df, id) =>
+      batches.add(id)
+      Ingest.ingestBatch(df, "doc_id", "text", s"$root/corpus", s"$root/fps")
+    }
+    try q.processAllAvailable() finally q.stop()
+
+    assert(batches.size == 2, s"expected one batch per file, got $batches")
+    // the second batch anti-joins against the fingerprint the first stored
+    assert(spark.read.parquet(s"$root/corpus").select("doc_id").as[Long]
+      .collect().toSeq == Seq(1L))
+  }
+
   test("watermark dedup: exact within the horizon, re-admits after expiry (bounded state)") {
     import java.sql.Timestamp
     def ts(s: String): Timestamp = Timestamp.valueOf(s)

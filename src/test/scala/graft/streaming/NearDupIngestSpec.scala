@@ -6,6 +6,16 @@ import graft.SparkSpec
 
 /** Streaming NEAR-dup ingest: MinHash bands propose against the persisted
   * band store, signature agreement confirms, min-id wins in-batch.
+  *
+  * Unlike IngestSpec and ScdSpec, no case here asserts that a restarted
+  * run compiles nothing. When batches hold near-duplicates, a run of this
+  * leg compiles about 70 classes, too many for the 100-entry codegen
+  * cache of the shared test session, so a restart compiles some of them
+  * again. Four AvailableNow runs on one checkpoint, two files per run,
+  * each file with a document, its in-batch near-dup and a near-dup of the
+  * previous run's document, compiled 71 / 24 / 24 / 12 classes in a fresh
+  * test JVM (65 / 55 / 53 / 56 with batches in the query's own session),
+  * and 71 / 33 / 0 / 0 with spark.sql.codegen.cache.maxEntries=2000.
   */
 class NearDupIngestSpec extends SparkSpec {
   import spark.implicits._
