@@ -1,6 +1,14 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import java.io.File
+
+import scala.collection.immutable.ListMap
+
+import com.fasterxml.jackson.annotation.JsonInclude
+import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper, PropertyNamingStrategies}
+import com.fasterxml.jackson.module.scala.DefaultScalaModule
+import org.apache.spark.metrics.source.CodegenMetrics
+import org.apache.spark.sql.{GraftBridge, SparkSession}
 import org.apache.spark.sql.functions.{count, lit, sum}
 
 /** Benchmark main: runs the headline query set (Queries.benchSet) against
@@ -11,21 +19,231 @@ import org.apache.spark.sql.functions.{count, lit, sum}
   * benchmark a row count instead of the operator — VERDICT r1 §wrong.4).
   * Errors are NOT swallowed: a failing query prints its error and the
   * process exits nonzero, so a bad round is visible in BENCH output.
+  *
+  * `ONLY=q1,q2` times just those registry queries (any of `Queries.all`)
+  * and writes no history file. Each timed run also records its layer split
+  * (build / plan / exec seconds, jobs, stages, tasks, Σtask, GC, shuffle,
+  * spill, codegen compiles, a plan digest) and its final plan; the run
+  * whose time is published has them written beside its time.
   */
 object Bench {
+  // reads every record; writes the layers with snake_case keys, leaving out
+  // an absent digest and an empty stage list
+  private val mapper = new ObjectMapper().registerModule(DefaultScalaModule)
+    .setPropertyNamingStrategy(PropertyNamingStrategies.SNAKE_CASE)
+    .setDefaultPropertyInclusion(JsonInclude.Include.NON_EMPTY)
+
+  /** The core count of a record: "cores" (detail and history files), the
+    * "cpus" of an official BENCH_rN.json, or 32 when it carries neither. */
+  private def coresOf(root: JsonNode): Int =
+    root.path("cores").asInt(root.path("cpus").asInt(32))
+
+  private def readJson(f: File): Option[JsonNode] =
+    try Some(mapper.readTree(f))
+    catch { case scala.util.control.NonFatal(_) => None }
+
+  /** Per-query seconds over the given maps: each query's smallest positive
+    * value (non-object nodes contribute nothing). */
+  private def queriesOf(nodes: JsonNode*): Map[String, Double] = {
+    val acc = scala.collection.mutable.Map.empty[String, Double]
+    nodes.filter(_.isObject).foreach(_.propertyStream().forEach { e =>
+      val v = e.getValue.asDouble()
+      if (v > 0 && acc.get(e.getKey).forall(v < _)) acc(e.getKey) = v
+    })
+    acc.toMap
+  }
+
+  private def listed(dir: File): Seq[File] =
+    Option(dir.listFiles()).map(_.toSeq.sortBy(_.getName)).getOrElse(Nil)
+
+  /** Files of `dir` whose name matches `re`, with the round its first group
+    * names. */
+  private def numbered(dir: File, re: String): Seq[(Int, File)] =
+    listed(dir).flatMap(f =>
+      re.r.findFirstMatchIn(f.getName).map(_.group(1).toInt -> f))
+  private val benchRecord = "^BENCH_r(\\d+)\\.json$"
+
+  /** The committed history file of a run: `r<N>_<sf>.json` at 32 cores,
+    * `r<N>_<sf>_c<cores>.json` otherwise; none for a run of unknown round
+    * or an `ONLY` run. */
+  def historyFile(histDir: File, round: Option[Int], only: Boolean,
+      sfName: String, cores: Int): Option[File] =
+    round.filter(_ => !only).map { rn =>
+      val suffix = if (cores == 32) "" else s"_c$cores"
+      new File(histDir, s"r${rn}_$sfName$suffix.json")
+    }
+
+  /** Cross-RUN load references (VERDICT r13 next #2): the within-run
+    * canary only sees intra-run drift, so a run that starts AND stays on
+    * a loaded machine publishes uniformly inflated numbers with a clean
+    * canary (r13's official record was ~35% above the same day's
+    * mid-round detail on 134 common queries). Each prior record of the
+    * same SF and core count — earlier `detailDir/bench_detail_*.json` runs
+    * (this round's own mid-round benches included, never the run's own
+    * `selfTag`) and the committed history maps — is kept as its OWN
+    * per-query map, and an attempt is judged by the MINIMUM sum-ratio
+    * against any single record with enough overlap: "is this run
+    * consistent with at least one clean prior run?" A pooled
+    * per-query-min reference was tried first and rejected — mins pooled
+    * across 7+ records (and across rounds that may run on differently
+    * provisioned machines) are collectively unachievable, and a genuinely
+    * clean run read 1.24× against the pool while reading ~1.0× against
+    * the single record it was actually comparable to. A record of another
+    * core count is never a reference: an 8-core map is no measure of a
+    * 32-core machine's load.
+    */
+  def loadRefs(detailDir: File, histDir: File, selfTag: String,
+      sfName: String, cores: Int): Seq[(String, Map[String, Double])] = {
+    val details = listed(detailDir)
+      .filter(f => f.getName.matches("bench_detail_.+\\.json") &&
+        f.getName != s"bench_detail_$selfTag.json")
+      .flatMap(f => readJson(f).collect {
+        // detail files pin the sf DIR; only same-SF records compare
+        case root if root.path("sf").asText("").endsWith(sfName) &&
+            coresOf(root) == cores =>
+          f.getName -> queriesOf(root.path("pass1"), root.path("pass2"))
+      })
+    val hist = listed(histDir).filter(_.getName.endsWith(".json"))
+      .flatMap(f => readJson(f).collect {
+        case root if root.path("sf").asText("") == sfName &&
+            coresOf(root) == cores =>
+          f.getName -> queriesOf(root.path("queries"))
+      })
+    (details ++ hist).filter(_._2.nonEmpty)
+  }
+
+  /** vs_prev's side: the newest prior round's per-query map of the same SF
+    * and core count, from EITHER an old-style `benchDir/BENCH_rN.json`
+    * parsed.queries map OR a committed `histDir/r<N>_<sf>[_c<cores>].json`
+    * (since r14 the stdout record carries no per-query map). With a known
+    * `round`, records of that round and later are excluded, so an
+    * in-round dev run never compares against the round's OWN history file
+    * (it would read ~1.0 and mask regressions).
+    */
+  def prevRecord(benchDir: File, histDir: File, round: Option[Int],
+      sfName: String, sfValue: Double, cores: Int)
+      : Option[(String, Map[String, Double])] = {
+    val cands =
+      (numbered(benchDir, benchRecord) ++ numbered(histDir,
+        "^r(\\d+)_" + java.util.regex.Pattern.quote(sfName) + "(?:_c\\d+)?\\.json$"))
+        .filter { case (n, _) => round.forall(n < _) }
+        // newest round first; within a round prefer the history file
+        // (full map, exact official numbers) over the BENCH tail
+        .sortBy { case (n, f) => (-n, if (f.getName.startsWith("BENCH_")) 1 else 0) }
+    cands.iterator.flatMap { case (_, f) =>
+      readJson(f).flatMap { root =>
+        val isBench = f.getName.startsWith("BENCH_")
+        // same-SF only: a BENCH record carries the numeric sf at its top
+        // level and/or a name/path inside parsed.sf —
+        // per-query seconds from a different scale factor are not a
+        // baseline (an sf0.01 local run vs the sf0.1 round record read
+        // 0.50× before this check). History files are name-filtered.
+        val sfOk = !isBench || {
+          val outer = root.path("sf")
+          (outer.isNumber && math.abs(outer.asDouble() - sfValue) < 1e-9) ||
+            root.path("parsed").path("sf").asText("").endsWith(sfName)
+        }
+        val m = queriesOf(
+          if (isBench) root.path("parsed").path("queries") else root.path("queries"))
+        if (sfOk && coresOf(root) == cores && m.nonEmpty) Some(f.getName -> m)
+        else None
+      }
+    }.nextOption()
+  }
+
+  /** `Queries.benchSet`, or the registry queries an `ONLY` list names. */
+  def selectQueries(only: Option[String]): Seq[Queries.Q] =
+    only.fold[Seq[Queries.Q]](Queries.benchSet)(_.split(",").toSeq.map(_.trim)
+      .filter(_.nonEmpty).map(n => Queries.all.find(_.name == n).getOrElse(
+        throw new IllegalArgumentException(s"unknown query $n; known: " +
+          Queries.all.map(_.name).mkString(", ")))))
+
+  /** A timed run's layer split as the detail and history files carry it:
+    * seconds inside the query function (eager checkpoints, probes), in the
+    * write's Catalyst optimization and planning, and in its execution;
+    * Spark counters summed over both halves; the final plan's digest; the
+    * five slowest stages (detail file only). */
+  final case class Layers(buildS: Double, planS: Double, execS: Double,
+      buildJobs: Int, jobs: Long, stages: Long, tasks: Long, taskS: Double,
+      gcS: Double, shuffleReadBytes: Long, shuffleWriteBytes: Long,
+      spillBytes: Long, codegenCompiles: Long,
+      digest: Option[Map[String, Int]], slowestStages: Seq[Stage])
+  final case class Stage(wallS: Double, tasks: Int, taskS: Double,
+      maxTaskS: Double, name: String)
+  /** One timed run of a query: seconds, success, what the recorder saw and
+    * the final plan of its write. */
+  final case class Run(sec: Double, ok: Boolean, layers: Layers, plan: Option[String])
+
+  /** One timed run of `q`: exactly `fn` plus its noop write are timed.
+    * Jobs fired while `fn` builds the DataFrame (eager checkpoints,
+    * probes) run in job group "build", the write's in "exec"; `recorder`
+    * is read after draining the listener bus, outside the timed region.
+    * A failing run's duration is kept for forensics but must never be
+    * mistaken for a measurement (Run.ok).
+    */
+  def timeOne(spark: SparkSession, recorder: Recorder, q: Queries.Q,
+      sfDir: String): Run = {
+    val sc = spark.sparkContext
+    GraftBridge.drainListeners(spark)
+    recorder.reset()
+    val compiled = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    sc.setJobGroup("build", q.name)
+    val t0 = System.nanoTime()
+    var t1 = 0L
+    val ok =
+      try {
+        val df = q.fn(spark, sfDir)
+        t1 = System.nanoTime()
+        sc.setJobGroup("exec", q.name)
+        df.write.format("noop").mode("overwrite").save()
+        true
+      } catch {
+        case e: Throwable =>
+          System.err.println(s"[bench] ${q.name} FAILED: ${e.getMessage}")
+          false
+      }
+    val t2 = System.nanoTime()
+    sc.clearJobGroup()
+    val compiles = CodegenMetrics.METRIC_COMPILATION_TIME.getCount - compiled
+    if (t1 == 0L) t1 = t2
+    // Untimed hygiene: queries are independent, but localCheckpoint
+    // leaves its RDD blocks cached after the query finishes; across
+    // 140+ timed runs those leaked blocks crowd the unified memory
+    // pool and tax LATER queries' execution memory (transform_chain
+    // measured 8.2 s late in a full bench vs 3.3 s standalone —
+    // r7 probe). Dropping them between queries keeps each
+    // measurement a cold, independent run.
+    sc.getPersistentRDDs.values.foreach(_.unpersist(blocking = false))
+    GraftBridge.drainListeners(spark)
+
+    val gs = Seq("build", "exec").map(recorder.groups.getOrElse(_, new GroupStats))
+    def total(f: GroupStats => Long): Long = gs.map(f).sum
+    def r3(x: Double): Double = math.round(x * 1e3) / 1e3
+    val write = recorder.plans.values.collectFirst { case ("exec", qe) => qe }
+    val planS = write.map(qe => Seq("optimization", "planning")
+      .flatMap(qe.tracker.phases.get).map(_.durationMs).sum / 1e3).getOrElse(0.0)
+    val slowest = gs.flatMap(g => g.stageWall.map { case (id, w) =>
+      val ds = g.stageTaskMs.getOrElse(id, Nil)
+      Stage(w / 1e3, ds.size, ds.sum / 1e3, ds.maxOption.getOrElse(0L) / 1e3,
+        g.stageName.getOrElse(id, "").takeWhile(_ != '\n').take(80))
+    }).sortBy(-_.wallS).take(5)
+    val layers = Layers(r3((t1 - t0) / 1e9), r3(planS), r3((t2 - t1) / 1e9 - planS),
+      gs.head.jobs, total(_.jobs), total(_.stages), total(_.tasks),
+      r3(total(_.taskMs) / 1e3), r3(total(_.gcMs) / 1e3), total(_.shuffleReadBytes),
+      total(_.shuffleWriteBytes), total(_.spillBytes), compiles,
+      write.map(qe => Recorder.digest(qe.executedPlan)), slowest)
+    Run((t2 - t0) / 1e9, ok, layers,
+      write.map(qe => Recorder.finalPlanString(qe.executedPlan)))
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cores = GraftSession.envCores(32)
+    val spark = GraftSession(cores)
+    val only = sys.env.get("ONLY")
+    val qs = selectQueries(only)
 
-    val sfName = new java.io.File(sfDir).getName
+    val sfName = new File(sfDir).getName
     // numeric scale factor parsed from the dir name ("sf0.1" → 0.1); used
     // to size the oracle-leg budgets (ADVICE r13: fixed 700 s/30 s budgets
     // starve larger SFs) — budgets scale linearly above the sf0.1 sizing.
@@ -33,6 +251,9 @@ object Bench {
       sfName.stripPrefix("sf").toDouble).getOrElse(0.1)
     val sfBudgetScale: Double = math.max(1.0, sfValue / 0.1)
 
+    val here = new File(".").getAbsoluteFile.getParentFile
+    val histDir = new File("tools/bench_history")
+    val detailDir = new File("target")
     // The current round, for the committed-history tag and vs_prev's
     // own-round guard: SPARK_GRAFT_ROUND when set, else INFERRED as
     // (newest BENCH_rN.json on disk) + 1 — the newest BENCH record is the
@@ -41,16 +262,12 @@ object Bench {
     // SPARK_GRAFT_ROUND (VERDICT r14 next #2: r14's official run left no
     // round-tagged history file, so the next round's per-query PERF diff
     // had no prev side); with it, every official run lands
-    // tools/bench_history/r<N>_<sf>.json unconditionally.
+    // tools/bench_history/r<N>_<sf>[_c<cores>].json unconditionally.
     val roundNum: Option[Int] = sys.env.get("SPARK_GRAFT_ROUND")
       .flatMap(r => scala.util.Try(
         r.replaceAll("[^0-9]", "").toInt).toOption)
       .orElse {
-        Option(new java.io.File(".").getAbsoluteFile.getParentFile.listFiles())
-          .getOrElse(Array.empty)
-          .flatMap(f => "^BENCH_r(\\d+)\\.json$".r
-            .findFirstMatchIn(f.getName).map(_.group(1).toInt))
-          .maxOption.map(_ + 1)
+        numbered(here, benchRecord).map(_._1).maxOption.map(_ + 1)
       }
     // The detail tag is computed ONCE per run (ADVICE r13: computing it per
     // emission under an unset SPARK_GRAFT_ROUND minted a new epoch tag per
@@ -66,60 +283,20 @@ object Bench {
     val detailTag: String = sys.env.get("SPARK_GRAFT_ROUND")
       .map(r => "r" + r.replaceAll("[^0-9]", ""))
       .getOrElse((System.currentTimeMillis() / 1000L).toString)
+    val detailPath = new File(detailDir, s"bench_detail_$detailTag.json")
+    val historyPath =
+      historyFile(histDir, roundNum, only.isDefined, sfName, cores)
+    // final plans land beside the history file, under its name, or beside
+    // the detail file when the run writes no history
+    val plansDir = historyPath
+      .map(f => new File(f.getParentFile, f.getName.stripSuffix(".json")))
+      .getOrElse(new File(detailDir, s"bench_detail_$detailTag"))
 
-    // Cross-RUN load references (VERDICT r13 next #2): the within-run
-    // canary only sees intra-run drift, so a run that starts AND stays on
-    // a loaded machine publishes uniformly inflated numbers with a clean
-    // canary (r13's official record was ~35% above the same day's
-    // mid-round detail on 134 common queries). Each prior same-SF record —
-    // earlier target/bench_detail_*.json runs (this round's own mid-round
-    // benches included) and the committed tools/bench_history/*.json maps —
-    // is kept as its OWN per-query map, and an attempt is judged by the
-    // MINIMUM sum-ratio against any single record with enough overlap:
-    // "is this run consistent with at least one clean prior run?" A pooled
-    // per-query-min reference was tried first and rejected — mins pooled
-    // across 7+ records (and across rounds that may run on differently
-    // provisioned machines) are collectively unachievable, and a genuinely
-    // clean run read 1.24× against the pool while reading ~1.0× against
-    // the single record it was actually comparable to. An attempt whose
-    // min-ratio exceeds 1.2 is load-inflated and re-runs under the same
-    // backoff ladder as a dirty canary; the published record carries the
-    // ratio and the winning baseline either way ("vs_history").
-    val historyRefs: Seq[(String, Map[String, Double])] = {
-      val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
-      def queryMin(ms: Seq[com.fasterxml.jackson.databind.JsonNode])
-          : Map[String, Double] = {
-        val acc = scala.collection.mutable.Map.empty[String, Double]
-        ms.foreach { m =>
-          if (m.isObject) m.propertyStream().forEach { e =>
-            val v = e.getValue.asDouble()
-            if (v > 0 && acc.get(e.getKey).forall(v < _)) acc(e.getKey) = v
-          }
-        }
-        acc.toMap
-      }
-      def tryRead(f: java.io.File): Option[com.fasterxml.jackson.databind.JsonNode] =
-        try Some(mapper.readTree(f))
-        catch { case scala.util.control.NonFatal(_) => None }
-      val details = Option(new java.io.File("target").listFiles())
-        .getOrElse(Array.empty)
-        .filter { f =>
-          val m = "^bench_detail_(.+)\\.json$".r.findFirstMatchIn(f.getName)
-          m.exists(_.group(1) != detailTag) // never self-reference
-        }
-        .flatMap(f => tryRead(f).collect {
-          // detail files pin the sf DIR; only same-SF records compare
-          case root if root.path("sf").asText("").endsWith(sfName) =>
-            f.getName -> queryMin(Seq(root.path("pass1"), root.path("pass2")))
-        })
-      val hist = Option(new java.io.File("tools/bench_history").listFiles())
-        .getOrElse(Array.empty).filter(_.getName.endsWith(".json"))
-        .flatMap(f => tryRead(f).collect {
-          case root if root.path("sf").asText("") == sfName =>
-            f.getName -> queryMin(Seq(root.path("queries")))
-        })
-      (details ++ hist).toSeq.filter(_._2.nonEmpty)
-    }
+    // An attempt whose min-ratio against the load references exceeds 1.2
+    // is load-inflated and re-runs under the same backoff ladder as a
+    // dirty canary; the published record carries the ratio and the
+    // winning baseline either way ("vs_history").
+    val historyRefs = loadRefs(detailDir, histDir, detailTag, sfName, cores)
     // minimum sum-ratio of an attempt's official times against any single
     // prior record sharing ≥25 queries (a thin overlap — first bench of a
     // new SF, or a heavily-changed board — can't carry a gate); returns
@@ -143,8 +320,8 @@ object Bench {
     // warms the same JIT paths at negligible data cost; fall back to a
     // single light query if no sibling dir exists.
     val warmDir = sfDir.replaceAll("sf[0-9.]+/?$", "sf0.001")
-    if (warmDir != sfDir && new java.io.File(warmDir).isDirectory) {
-      Queries.benchSet.foreach { q =>
+    if (warmDir != sfDir && new File(warmDir).isDirectory) {
+      qs.foreach { q =>
         try q.fn(spark, warmDir).write.format("noop").mode("overwrite").save()
         // NonFatal only: an OOM/VM error here leaves the session broken and
         // must propagate, not resurface as confusing timed-pass failures
@@ -156,38 +333,8 @@ object Bench {
         .write.format("noop").mode("overwrite").save()
     }
 
-    // Two timed passes, min per query: a transient noisy-neighbor spike in
-    // one pass (the driver's r02 run showed 10-14 s outliers on ~1 s
-    // queries) doesn't misreport the engine's speed. The second pass runs in
-    // REVERSE query order: a sustained machine-load window then inflates
-    // DIFFERENT queries in each pass, so min-per-query rejects it — same-order
-    // passes let one load window contaminate the same queries twice
-    // (VERDICT r4 §wrong.1: positions 2-12 inflated 2.2-2.9x in both passes).
-    // returns (seconds, succeeded): a failing run's duration is kept for
-    // forensics but must never be mistaken for a measurement
-    def timeOne(q: Queries.Q): (Double, Boolean) = {
-      val t0 = System.nanoTime()
-      val ok =
-        try {
-          q.fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-          true
-        } catch {
-          case e: Throwable =>
-            System.err.println(s"[bench] ${q.name} FAILED: ${e.getMessage}")
-            false
-        }
-      val dt = (System.nanoTime() - t0) / 1e9
-      // Untimed hygiene: queries are independent, but localCheckpoint
-      // leaves its RDD blocks cached after the query finishes; across
-      // 140+ timed runs those leaked blocks crowd the unified memory
-      // pool and tax LATER queries' execution memory (transform_chain
-      // measured 8.2 s late in a full bench vs 3.3 s standalone —
-      // r7 probe). Dropping them between queries keeps each
-      // measurement a cold, independent run.
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = false))
-      (dt, ok)
-    }
+    val recorder = new Recorder
+    spark.sparkContext.addSparkListener(recorder)
     // Canary: one fixed query timed at start / between passes / end.
     // Identical work each time, so divergent canary timings expose a
     // contaminated run directly in the artifact. Deliberately HEAVY
@@ -212,8 +359,7 @@ object Bench {
     // driver's record stop being a coin-flip on that. Both attempts stay
     // in the detail file for forensics.
     case class Attempt(canaries: Seq[Double],
-        pass1: Seq[(String, (Double, Boolean))],
-        pass2: Seq[(String, (Double, Boolean))]) {
+        pass1: Seq[(String, Run)], pass2: Seq[(String, Run)]) {
       val ratio: Double = canaries.max / math.max(canaries.min, 1e-9)
       // absolute canary spread: a ratio on a short canary flips on pure
       // scheduler jitter; genuine load moves the canary by large
@@ -226,37 +372,54 @@ object Bench {
       // would republish the min-across-attempts sampling bias for it)
       val failed: Set[String] = {
         val p2 = pass2.toMap
-        pass1.collect { case (n, (_, ok1)) if !ok1 && !p2(n)._2 => n }.toSet
+        pass1.collect { case (n, r1) if !r1.ok && !p2(n).ok => n }.toSet
       }
       // min over SUCCESSFUL passes only: a fast failure is not a
       // measurement and must not undercut the clean pass's time; a query
       // with no clean pass is in `failed` and excluded from the ratio
       val results: Seq[(String, Double)] = {
         val p2 = pass2.toMap
-        pass1.map { case (n, (t1, ok1)) =>
-          val (t2, ok2) = p2(n)
-          n -> ((ok1, ok2) match {
-            case (true, false) => t1
-            case (false, true) => t2
-            case _ => math.min(t1, t2)
+        pass1.map { case (n, r1) =>
+          val r2 = p2(n)
+          n -> ((r1.ok, r2.ok) match {
+            case (true, false) => r1.sec
+            case (false, true) => r2.sec
+            case _ => math.min(r1.sec, r2.sec)
           })
         }
       }
-      def passTimes(p: Seq[(String, (Double, Boolean))]): Seq[(String, Double)] =
-        p.map { case (n, (t, _)) => n -> t }
+      def passTimes(p: Seq[(String, Run)]): Seq[(String, Double)] =
+        p.map { case (n, r) => n -> r.sec }
     }
+    // Two timed passes, min per query: a transient noisy-neighbor spike in
+    // one pass (the official r02 run showed 10-14 s outliers on ~1 s
+    // queries) doesn't misreport the engine's speed. The second pass runs in
+    // REVERSE query order: a sustained machine-load window then inflates
+    // DIFFERENT queries in each pass, so min-per-query rejects it — same-order
+    // passes let one load window contaminate the same queries twice
+    // (VERDICT r4 §wrong.1: positions 2-12 inflated 2.2-2.9x in both passes).
     def runAttempt(): Attempt = {
       // failures are PER attempt (computed inside Attempt): a
       // load-induced failure in a discarded attempt must not exclude the
       // query from the official record or flip the exit code when the
       // kept attempt ran it clean
       val c0 = canary()
-      val pass1 = Queries.benchSet.map(q => q.name -> timeOne(q))
+      val pass1 = qs.map(q => q.name -> timeOne(spark, recorder, q, sfDir))
       val c1 = canary()
-      val pass2 = Queries.benchSet.reverse.map(q => q.name -> timeOne(q))
+      val pass2 = qs.reverse.map(q => q.name -> timeOne(spark, recorder, q, sfDir))
       val c2 = canary()
       Attempt(Seq(c0, c1, c2), pass1, pass2)
     }
+    // The attempt the record is built from: failures first, then
+    // cross-run load inflation (r13: a canary-clean but uniformly inflated
+    // attempt must lose to a history-consistent one), then the canary ratio.
+    def cleanest(attempts: Seq[Attempt]): Attempt =
+      attempts.minBy(a => (a.failed.size,
+        historyInflation(a.results).map(_._2).getOrElse(0.0), a.ratio))
+    // load-inflated = canary-clean but uniformly slower than EVERY prior
+    // same-SF record (the r13 failure shape)
+    def inflated(results: Seq[(String, Double)]): Boolean =
+      historyInflation(results).exists(_._2 > 1.2)
 
     // Cross-engine baseline: time every headliner's DuckDB oracle over the
     // SAME parquet tables (tools/oracle_bench.py, two passes, min — the
@@ -273,15 +436,15 @@ object Bench {
     // capped slack.
     def runOracleBaseline(): (Map[String, Double], Set[String]) =
       try {
-        val tsv = java.io.File.createTempFile("graft_oracle_sql", ".tsv")
+        val tsv = File.createTempFile("graft_oracle_sql", ".tsv")
         val pw = new java.io.PrintWriter(tsv, "UTF-8")
-        try Queries.benchSet.foreach { q =>
+        try qs.foreach { q =>
           q.oracle.foreach { sql =>
             pw.println(q.name + "\t" +
               java.util.Base64.getEncoder.encodeToString(sql.getBytes("UTF-8")))
           }
         } finally pw.close()
-        val out = java.io.File.createTempFile("graft_oracle_times", ".tsv")
+        val out = File.createTempFile("graft_oracle_times", ".tsv")
         val pb = new ProcessBuilder("python3", "tools/oracle_bench.py",
           sfDir, tsv.getPath, out.getPath)
         // SF-aware budgets (ADVICE r13 #5): the 30 s per-oracle cap and
@@ -353,20 +516,13 @@ object Bench {
       // cannot. The mild min-of-2k sampling bias vs the oracle's min-of-2 is
       // the lesser error and is fully disclosed: the record's "selection"
       // field pins which rule produced the published numbers.
-      // attempt choice weighs failures first, then cross-run load inflation
-      // (r13: a canary-clean but uniformly inflated attempt must lose to a
-      // history-consistent one), then the canary ratio
-      val best = attempts.minBy(a => (a.failed.size,
-        historyInflation(a.results).map(_._2).getOrElse(0.0), a.ratio))
-      val bestInflated =
-        historyInflation(best.results).exists(_._2 > 1.2)
+      val best = cleanest(attempts)
       val selection =
-        if (!best.dirty && !bestInflated) "cleanest_attempt"
+        if (!best.dirty && !inflated(best.results)) "cleanest_attempt"
         else "best_of_clean_passes"
       def cleanRuns(n: String): Seq[Double] = attempts.flatMap(a =>
-        (a.pass1 ++ a.pass2).collect { case (`n`, (t, true)) => t })
-      val failed =
-        Queries.benchSet.map(_.name).filter(cleanRuns(_).isEmpty).toSet
+        (a.pass1 ++ a.pass2).collect { case (`n`, r) if r.ok => r.sec })
+      val failed = qs.map(_.name).filter(cleanRuns(_).isEmpty).toSet
       val Seq(canaryStart, canaryMid, canaryEnd) = best.canaries
       val pass1 = best.passTimes(best.pass1)
       val pass2 = best.passTimes(best.pass2)
@@ -388,6 +544,13 @@ object Bench {
             else n -> tBest
           }
         }
+      // the run each published time came from: its layers and plan are the
+      // ones written, so every figure beside a time was measured with it
+      val published: Seq[(String, Run)] = results.sortBy(_._1).flatMap { case (n, t) =>
+        attempts.iterator.flatMap(a => a.pass1 ++ a.pass2)
+          .collectFirst { case (`n`, r) if r.sec == t => n -> r }
+      }
+      val layers = ListMap(published.map { case (n, r) => n -> r.layers }: _*)
       def jmap(kvs: Seq[(String, Double)]): String =
         kvs.map { case (k, v) => "\"" + k + "\":" + f"$v%.3f" }
           .mkString("{", ",", "}")
@@ -423,138 +586,55 @@ object Bench {
       // number (r10 task #5). Only entries for currently-capped queries are
       // surfaced — an uncapped live run supersedes the offline file.
       val offlineUncapped: Map[String, Double] =
-        try {
-          val sfName = new java.io.File(sfDir).getName
-          val node = new com.fasterxml.jackson.databind.ObjectMapper()
-            .readTree(new java.io.File("tools/oracle_uncapped.json"))
-            .path(sfName)
+        readJson(new File("tools/oracle_uncapped.json")).map { root =>
           val m = scala.collection.mutable.Map.empty[String, Double]
-          node.propertyStream().forEach { e =>
+          root.path(sfName).propertyStream().forEach { e =>
             if (oracleCapped(e.getKey))
               m(e.getKey) = e.getValue.path("sec").asDouble()
           }
           m.toMap
-        } catch { case scala.util.control.NonFatal(_) => Map.empty }
+        }.getOrElse(Map.empty)
       val offlineShown = offlineUncapped.toSeq.sortBy(_._1)
         .map { case (k, v) => "\"" + k + "\":" + f"$v%.2f" }
         .mkString("{", ",", "}")
-      // Contamination self-report: the three canaries do IDENTICAL work, so
-      // their max/min ratio directly measures machine-load drift across the
-      // run (VERDICT r4 §wrong.1's class). The flag now matches the retry
-      // gate (1.2): an official record whose cleanest attempt still drifted
-      // past the gate after all backoff attempts is suspect, full stop.
-      val canaries = Seq(canaryStart, canaryMid, canaryEnd)
-      val canaryRatio = canaries.max / math.max(canaries.min, 1e-9)
       // "vs_history": the published results' sum-ratio vs the cross-run
-      // per-query-min reference — the signal the canary cannot see (a run
-      // that starts and stays loaded). > 1.2 marks the record contaminated
-      // even with a flat canary (r13's official record was canary-clean and
+      // load references — the signal the canary cannot see (a run that
+      // starts and stays loaded). Contamination self-report: the three
+      // canaries do IDENTICAL work, so a dirty best attempt (the retry
+      // gate's own test) or a published map > 1.2 over history marks the
+      // record contaminated (r13's official record was canary-clean and
       // 1.35× inflated vs the same-day detail).
       val inflationOpt = historyInflation(results)
-      val contaminated = (canaryRatio > 1.2 &&
-        (canaries.max - canaries.min) > 0.3) ||
-        inflationOpt.exists(_._2 > 1.2)
+      val contaminated = best.dirty || inflationOpt.exists(_._2 > 1.2)
       val vsHistory: String = inflationOpt match {
         case Some((refName, r, n)) =>
           f"""{"ref":"$refName","n":$n,"ratio":$r%.2f,"refs":${historyRefs.size}}"""
         case None => "null"
       }
-      // vs_prev: regression check against the newest prior round's committed
-      // record, over the queries common to both. Since r14 the stdout record
-      // carries no per-query map (it burned the driver's ~2 KB tail two
-      // rounds running), so the newest prior round resolves from EITHER an
-      // old-style BENCH_r*.json parsed.queries map OR the committed
-      // tools/bench_history/r*_<sf>.json written by that round's bench.
-      // A regression is a red field in the record, not archaeology.
-      // Best-effort: any parse problem → null. Own-round protection: with
-      // SPARK_GRAFT_ROUND set (the round workflow), records of the current
-      // and later rounds are excluded; epoch-tagged ad-hoc history files
+      // vs_prev: regression check against the newest prior round's record
+      // of this SF and core count, over the queries common to both. A
+      // regression is a red field in the record, not archaeology.
+      // Best-effort: no record → null. Epoch-tagged ad-hoc history files
       // never participate (they back the load gate instead).
       val vsPrev: String =
-        try {
-          val here = new java.io.File(".").getAbsoluteFile.getParentFile
-          // own-round guard now uses the inferred round too: an in-round
-          // dev run must not vs_prev-compare against the round's OWN
-          // history file (it would read ~1.0 and mask regressions)
-          val round = roundNum
-          val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
-          def queriesOf(node: com.fasterxml.jackson.databind.JsonNode)
-              : Option[Map[String, Double]] =
-            if (!node.isObject) None
+        prevRecord(here, histDir, roundNum, sfName, sfValue, cores) match {
+          case Some((fname, prev)) =>
+            val common = results.filter { case (n, _) =>
+              prev.contains(n) && !failed.contains(n) }
+            if (common.isEmpty) "null"
             else {
-              val m = scala.collection.mutable.Map.empty[String, Double]
-              node.propertyStream()
-                .forEach(e => m(e.getKey) = e.getValue.asDouble())
-              if (m.nonEmpty) Some(m.toMap) else None
+              val ratio = common.map(_._2).sum /
+                common.map { case (n, _) => prev(n) }.sum
+              val (wq, wt) = common.maxBy { case (n, t) => t / prev(n) }
+              f"""{"file":"$fname","common_n":${common.size},"ratio":$ratio%.2f,"worst":{"q":"$wq","ratio":${wt / prev(wq)}%.2f}}"""
             }
-          val benchCands = Option(here.listFiles()).getOrElse(Array.empty)
-            .flatMap { f =>
-              val m = "^BENCH_r(\\d+)\\.json$".r.findFirstMatchIn(f.getName)
-              m.map(_.group(1).toInt -> f)
-            }
-          val histCands =
-            Option(new java.io.File("tools/bench_history").listFiles())
-              .getOrElse(Array.empty)
-              .flatMap { f =>
-                val m = ("^r(\\d+)_" +
-                  java.util.regex.Pattern.quote(sfName) + "\\.json$").r
-                  .findFirstMatchIn(f.getName)
-                m.map(_.group(1).toInt -> f)
-              }
-          val cands = (benchCands ++ histCands)
-            .filter { case (n, _) => round.forall(n < _) }
-            .sortBy { case (n, f) =>
-              // newest round first; within a round prefer the history file
-              // (full map, exact official numbers) over the BENCH tail
-              (-n, if (f.getName.startsWith("BENCH_")) 1 else 0)
-            }
-          val prevOpt = cands.iterator.flatMap { case (_, f) =>
-            try {
-              val root = mapper.readTree(f)
-              // same-SF only: a BENCH record carries the numeric sf at its
-              // top level (driver field) and/or a name/path inside parsed.sf
-              // — per-query seconds from a different scale factor are not a
-              // baseline (an sf0.01 local run vs the sf0.1 round record
-              // read 0.50× before this check). History files are already
-              // name-filtered.
-              val sfOk =
-                if (!f.getName.startsWith("BENCH_")) true
-                else {
-                  val outer = root.path("sf")
-                  val inner = root.path("parsed").path("sf").asText("")
-                  (outer.isNumber &&
-                    math.abs(outer.asDouble() - sfValue) < 1e-9) ||
-                    inner.endsWith(sfName)
-                }
-              val node =
-                if (f.getName.startsWith("BENCH_"))
-                  root.path("parsed").path("queries")
-                else root.path("queries")
-              if (!sfOk) None else queriesOf(node).map(f.getName -> _)
-            } catch { case scala.util.control.NonFatal(_) => None }
-          }.buffered.headOption
-          prevOpt match {
-            case Some((fname, prev)) =>
-              val common = results.filter { case (n, _) =>
-                prev.contains(n) && prev(n) > 0 && !failed.contains(n) }
-              if (common.isEmpty) "null"
-              else {
-                val ratio = common.map(_._2).sum /
-                  common.map { case (n, _) => prev(n) }.sum
-                val (wq, wt) = common.maxBy { case (n, t) => t / prev(n) }
-                f"""{"file":"$fname","common_n":${common.size},"ratio":$ratio%.2f,"worst":{"q":"$wq","ratio":${wt / prev(wq)}%.2f}}"""
-              }
-            case None => "null"
-          }
-        } catch { case scala.util.control.NonFatal(_) => "null" }
+          case None => "null"
+        }
       // Per-pass forensics go to a FILE, not stdout: the driver keeps only a
       // ~2 KB stdout tail, which truncated the detail line in r5/r6 and left
       // beyond-canary swings unattributable (VERDICT r6 §missing.1). Stdout
       // carries only the short canonical record, which references the file.
-      val detailPath = {
-        val dir = new java.io.File("target"); dir.mkdirs()
-        new java.io.File(dir, s"bench_detail_$detailTag.json")
-      }
+      detailDir.mkdirs()
       // every attempt's passes + canaries are retained (attempt 1 first);
       // the official record above uses the best-canary attempt
       // p1_failed/p2_failed attribute every ok=false run to its pass: the
@@ -564,8 +644,8 @@ object Bench {
       val attemptsJson = attempts.zipWithIndex.map { case (a, i) =>
         def names(xs: Seq[String]): String =
           xs.sorted.map("\"" + _ + "\"").mkString("[", ",", "]")
-        def failedIn(p: Seq[(String, (Double, Boolean))]): Seq[String] =
-          p.collect { case (n, (_, false)) => n }
+        def failedIn(p: Seq[(String, Run)]): Seq[String] =
+          p.collect { case (n, r) if !r.ok => n }
         val af = names(a.failed.toSeq)
         f""""attempt${i + 1}":{"canaries":[${a.canaries.map(c => f"$c%.3f").mkString(",")}],"ratio":${a.ratio}%.2f,"failed":$af,"p1_failed":${names(failedIn(a.pass1))},"p2_failed":${names(failedIn(a.pass2))},"pass1":${jmap(a.passTimes(a.pass1))},"pass2":${jmap(a.passTimes(a.pass2))}}"""
       }.mkString(",")
@@ -576,30 +656,32 @@ object Bench {
       val borrowedShown = borrowed.toSeq.sorted
         .map("\"" + _ + "\"").mkString("[", ",", "]")
       // "results" is the OFFICIAL per-query map (post selection/borrowing) —
-      // the map the stdout record no longer carries
-      val detail = f"""{"metric":"bench_detail","sf":"$sfDir","final":$isFinal,"selection":"$selection","canary":{"start":$canaryStart%.3f,"mid":$canaryMid%.3f,"end":$canaryEnd%.3f},"results":${jmap(results.sortBy(_._1))},"pass1":${jmap(pass1)},"pass2":${jmap(pass2)},"borrowed":$borrowedShown,"oracle_sec":${jmap(oracleTimes.toSeq.sortBy(_._1))},"oracle_capped":$cappedShown,$attemptsJson}"""
+      // the map the stdout record no longer carries; "layers" is measured
+      // by the same runs
+      val detail = f"""{"metric":"bench_detail","sf":"$sfDir","cores":$cores,"final":$isFinal,"selection":"$selection","canary":{"start":$canaryStart%.3f,"mid":$canaryMid%.3f,"end":$canaryEnd%.3f},"results":${jmap(results.sortBy(_._1))},"layers":${mapper.writeValueAsString(layers)},"pass1":${jmap(pass1)},"pass2":${jmap(pass2)},"borrowed":$borrowedShown,"oracle_sec":${jmap(oracleTimes.toSeq.sortBy(_._1))},"oracle_capped":$cappedShown,$attemptsJson}"""
       val w = new java.io.PrintWriter(detailPath, "UTF-8")
       try w.println(detail) finally w.close()
-      // Committed per-round history: the full official map, keyed by round
-      // tag + SF. This is what future rounds' vs_prev and load gate read now
-      // that the stdout record is map-free; git-committing it is what makes
-      // the comparison survive target/ cleanups. Rewritten per emission
-      // (same path — newest wins). Written whenever the round is KNOWN —
-      // explicitly via SPARK_GRAFT_ROUND or inferred from the newest
-      // BENCH_rN.json (the driver's official runs set no env, and r14's
-      // round-tagged map went missing because of it; the round's final run,
-      // driver or builder, now always lands here and one `git add` commits
-      // it). Runs in a checkout with no BENCH records at all (no round
-      // signal) still skip the write.
-      roundNum.foreach { rn =>
-        try {
-          val hdir = new java.io.File("tools/bench_history"); hdir.mkdirs()
-          val hw = new java.io.PrintWriter(
-            new java.io.File(hdir, s"r${rn}_$sfName.json"), "UTF-8")
-          try hw.println(f"""{"sf":"$sfName","tag":"r$rn","final":$isFinal,"total":$total%.3f,"queries":${jmap(results.sortBy(_._1))}}""")
+      // Committed per-round history: the full official map and its layers,
+      // keyed by round tag + SF (+ core count off 32). This is what future
+      // rounds' vs_prev and load gate read now that the stdout record is
+      // map-free; git-committing it is what makes the comparison survive
+      // target/ cleanups. Rewritten per emission (same path — newest
+      // wins). Written whenever the round is KNOWN — explicitly via
+      // SPARK_GRAFT_ROUND or inferred from the newest BENCH_rN.json (the
+      // official runs set no env, and r14's round-tagged map went
+      // missing because of it). The final plans of the published runs land
+      // beside it, one <query>.txt each.
+      try {
+        historyPath.foreach { f =>
+          f.getParentFile.mkdirs()
+          val hw = new java.io.PrintWriter(f, "UTF-8")
+          try hw.println(f"""{"sf":"$sfName","tag":"r${roundNum.get}","cores":$cores,"final":$isFinal,"total":$total%.3f,"queries":${jmap(results.sortBy(_._1))},"layers":${mapper.writeValueAsString(layers.map { case (n, l) => n -> l.copy(slowestStages = Nil) })}}""")
           finally hw.close()
-        } catch { case scala.util.control.NonFatal(_) => () }
-      }
+        }
+        plansDir.mkdirs()
+        for ((n, r) <- published; p <- r.plan)
+          java.nio.file.Files.writeString(new File(plansDir, s"$n.txt").toPath, p)
+      } catch { case scala.util.control.NonFatal(_) => () }
       // The stdout record is SCALAR-ONLY (plus the short capped list):
       // r12's record died to a driver timeout, r13's to the ~2 KB stdout
       // tail (the 45-slowest map alone overflowed it). Everything
@@ -607,7 +689,7 @@ object Bench {
       // oracle_* are the cross-engine baseline: total DuckDB seconds over
       // the oracle_n headliners both engines timed, spark seconds over that
       // same subset, and their ratio (<1 = Spark faster).
-      println(f"""{"metric":"total","value":$total%.3f,"unit":"sec","final":$isFinal,"n_queries":${results.size},"sf":"$sfName","failed":${failed.size},"canary_ratio":$canaryRatio%.2f,"contaminated":$contaminated,"vs_history":$vsHistory,"selection":"$selection","attempts":${attempts.size},"borrowed_n":${borrowed.size},"oracle_n":${common.size},"oracle_total":$oracleTotal%.3f,"spark_common":$sparkCommon%.3f,"spark_vs_oracle":$sparkVsOracle%.2f,"oracle_capped_n":${oracleCapped.size},"oracle_uncapped_offline_sec":$offlineShown,"spark_vs_oracle_measured":$sparkVsOracleMeasured%.2f,"vs_prev":$vsPrev,"detail":"${detailPath.getPath}"}""")
+      println(f"""{"metric":"total","value":$total%.3f,"unit":"sec","final":$isFinal,"n_queries":${results.size},"sf":"$sfName","failed":${failed.size},"canary_ratio":${best.ratio}%.2f,"contaminated":$contaminated,"vs_history":$vsHistory,"selection":"$selection","attempts":${attempts.size},"borrowed_n":${borrowed.size},"oracle_n":${common.size},"oracle_total":$oracleTotal%.3f,"spark_common":$sparkCommon%.3f,"spark_vs_oracle":$sparkVsOracle%.2f,"oracle_capped_n":${oracleCapped.size},"oracle_uncapped_offline_sec":$offlineShown,"spark_vs_oracle_measured":$sparkVsOracleMeasured%.2f,"vs_prev":$vsPrev,"detail":"${detailPath.getPath}"}""")
       failed
     }
 
@@ -618,16 +700,15 @@ object Bench {
     // 45/90 s backoffs proved too short (r11 published at 1.46 after 3
     // attempts inside one window): the windows observed in r9-r11 detail
     // files run minutes, so the backoff must too (2 / 5 / 10 min).
+    // A load-inflated attempt re-runs under the same ladder.
     val maxAttempts = sys.env.get("SPARK_GRAFT_BENCH_ATTEMPTS")
       .flatMap(s => scala.util.Try(s.toInt).toOption).getOrElse(4)
     val backoffSec = Seq(120L, 300L, 600L)
     val attemptBuf = scala.collection.mutable.ArrayBuffer(runAttempt())
-    def cleanest = attemptBuf.minBy(a => (a.failed.size,
-      historyInflation(a.results).map(_._2).getOrElse(0.0), a.ratio))
-    // load-inflated = canary-clean but uniformly slower than EVERY prior
-    // same-SF record (the r13 failure shape) — re-runs under the same
-    // backoff ladder as a dirty canary
-    def inflated = historyInflation(cleanest.results).exists(_._2 > 1.2)
+    def retry: Boolean = {
+      val c = cleanest(attemptBuf.toSeq)
+      c.dirty || c.failed.nonEmpty || inflated(c.results)
+    }
     // A COMPLETE record streams after every attempt (and again after the
     // oracle leg): r12's official number vanished entirely because the
     // driver's budget expired mid-backoff and the only println sat at the
@@ -637,8 +718,7 @@ object Bench {
     // the newest complete record on record. "final" marks the fully-staged
     // emission (all attempts + oracle baseline).
     emit(attemptBuf.toSeq, None, isFinal = false)
-    while (attemptBuf.size < maxAttempts &&
-        (cleanest.dirty || cleanest.failed.nonEmpty || inflated)) {
+    while (attemptBuf.size < maxAttempts && retry) {
       Thread.sleep(
         backoffSec(math.min(attemptBuf.size - 1, backoffSec.size - 1)) * 1000L)
       attemptBuf += runAttempt()

@@ -19,6 +19,24 @@ object GraftBridge {
       plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan): DataFrame =
     classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession], plan)
 
+  /** Block until every listener event posted so far has been delivered
+    * (`SparkContext.listenerBus` is private[spark]), so a listener's
+    * counters are complete when read, without a sleep.
+    */
+  def drainListeners(spark: SparkSession): Unit =
+    spark.sparkContext.listenerBus.waitUntilEmpty()
+
+  /** The `QueryExecution` a successful SQL execution's end event carries —
+    * the object QueryExecutionListeners receive, which holds the final
+    * plan and the planning tracker. The field is private[sql]; a listener
+    * reads it here because only the event also carries the execution id
+    * (a QueryExecution's own `id` is a different counter), and that id is
+    * what ties the execution to its start event's job group.
+    */
+  def succeededExecution(e: execution.ui.SparkListenerSQLExecutionEnd)
+      : Option[execution.QueryExecution] =
+    if (e.executionFailure.isEmpty) Option(e.qe) else None
+
   /** Cap the statistics a checkpoint's [[execution.LogicalRDD]] carried
     * over from its origin plan (`Dataset.checkpoint` →
     * `LogicalRDD.rewriteStatsAndConstraints` stores the origin's
@@ -27,7 +45,7 @@ object GraftBridge {
     * round k's checkpoint stores a product of round k−1's stored products
     * — the BigInt's digit count grows geometrically with the round number
     * and the driver ends up in million-digit Toom-Cook multiplications
-    * inside stats estimation (observed: graft.JobProbe graph_sssp pinned
+    * inside stats estimation (observed: a graph_sssp probe run pinned
     * one core for minutes inside BigInteger.multiplyToomCook3 under
     * SizeInBytesOnlyStatsPlanVisitor once the Δ-stepping merge became a
     * join). Anything past Long.MaxValue is equally "don't broadcast" to

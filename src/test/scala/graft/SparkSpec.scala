@@ -8,20 +8,11 @@ import org.scalatest.funsuite.AnyFunSuite
   * is ~5 s, so per-suite sessions would dominate test time.
   */
 object TestSpark {
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // catalog writes (saveAsTable in BucketingSpec) land in a temp
-      // warehouse, not ./spark-warehouse inside the repo
-      .config("spark.sql.warehouse.dir",
-        java.nio.file.Files.createTempDirectory("graft-warehouse").toString)
-      .getOrCreate()
-    s.sparkContext.setLogLevel("ERROR")
-    s
-  }
+  // local[4] whatever SPARK_GRAFT_CPUS says; catalog writes (saveAsTable in
+  // BucketingSpec) land in a temp warehouse, not ./spark-warehouse inside
+  // the repo
+  lazy val spark: SparkSession = GraftSession(4, Some(
+    java.nio.file.Files.createTempDirectory("graft-warehouse").toString))
 }
 
 trait SparkSpec extends AnyFunSuite {

@@ -110,4 +110,21 @@ class SourceDisciplineSpec extends AnyFunSuite {
     assert(stale.isEmpty,
       s"stale whitelist entries (no matching site remains): ${stale.map(w => s"${w._1}:${w._2}")}")
   }
+
+  test("src/main builds a SparkSession in one place: GraftSession") {
+    val builders: Seq[String] =
+      Using.resource(Files.walk(Paths.get("src/main/scala"))) { stream =>
+        stream.iterator().asScala
+          .filter(p => p.toString.endsWith(".scala"))
+          .flatMap { p =>
+            Files.readAllLines(p).asScala.zipWithIndex.collect {
+              case (l, i) if !l.trim.startsWith("//") && !l.trim.startsWith("*") &&
+                  l.contains("SparkSession.builder") =>
+                s"${p.getFileName}:${i + 1}"
+            }
+          }.toSeq
+      }
+    assert(builders.size == 1 && builders.head.startsWith("GraftSession.scala:"),
+      s"SparkSession.builder outside GraftSession: $builders")
+  }
 }
