@@ -7,9 +7,23 @@ import org.apache.spark.sql.SparkSession
   * only in core count and directories.
   */
 object GraftSession {
+  /** Entries of Spark's compiled-code cache
+    * (`spark.sql.codegen.cache.maxEntries`, 100 by default; a static conf,
+    * so only the builder can set it). Spark compiles one class per distinct
+    * generated source and keeps it in this cache, so at 100 a query's
+    * classes are evicted by the next few queries and compiled again on its
+    * next run. Measured class counts: a near-dup ingest run compiles about
+    * 70, an analytics_mix round about 400, and one Bench pass over the
+    * registry at sf0.001 about 4,500 (counted per query, so classes that
+    * queries share are counted more than once). 8192 holds a whole pass,
+    * with room for the cache evicting per segment before it is full.
+    */
+  private val CodegenCacheEntries = 8192
+
   /** `local[cores]` with one shuffle partition per core, UTC session time,
-    * no UI and WARN logging. `warehouseDir` moves catalog writes
-    * (`saveAsTable`) out of the working directory.
+    * no UI, WARN logging and a codegen cache of [[CodegenCacheEntries]].
+    * `warehouseDir` moves catalog writes (`saveAsTable`) out of the working
+    * directory.
     */
   def apply(cores: Int, warehouseDir: Option[String] = None): SparkSession = {
     val b = SparkSession.builder()
@@ -17,6 +31,7 @@ object GraftSession {
       .config("spark.sql.shuffle.partitions", cores.toString)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
+      .config("spark.sql.codegen.cache.maxEntries", CodegenCacheEntries.toString)
     warehouseDir.foreach(b.config("spark.sql.warehouse.dir", _))
     val spark = b.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

@@ -110,6 +110,18 @@ object Pipeline {
     * (2) scale — streaming dropDuplicates keeps one state row per distinct
     *     link FOREVER (unbounded state growth); per-batch dedup holds no
     *     standing state at all.
+    *
+    * Each batch is already one partition: `maxFilesPerTrigger=1` gives it
+    * one file, and a `multiLine` CSV read does not split a file. The batch
+    * reaches [[Transform]] as `coalesce(1)`, which moves no row but lets
+    * the planner see a single partition, which already satisfies the
+    * dedup's clustering on link: no exchange is planned, and a file is one
+    * job, one task and one JDBC connection (two jobs and two tasks with
+    * the hash shuffle on link). What this gives up: with the shuffle, a
+    * file whose deduped rows exceeded AQE's advisory partition size
+    * (`spark.sql.adaptive.advisoryPartitionSizeInBytes`, 64 MB) ran its
+    * post-dedup work and its JDBC insert on more than one core; smaller
+    * files were coalesced into one task by AQE anyway.
     */
   private def transformLeg(spark: SparkSession, rawDir: String,
       archiveDir: String, checkpoint: String, dumpDate: String,
@@ -117,7 +129,7 @@ object Pipeline {
     MicroBatch.start(
         arrivals(spark, PropertySchema.raw, rawDir, archiveDir),
         checkpoint, trigger) { (batch, batchId) =>
-      sink(Transform(batch, dumpDate), batchId)
+      sink(Transform(batch.coalesce(1), dumpDate), batchId)
     }
 
   /** Streaming form of [[runBatch]]: [[transformLeg]] appending parquet.

@@ -9,11 +9,17 @@ import graft.schema.PropertySchema
 /** The reference's core "query": its 13-step eager pandas pipeline
   * (scripts/transform.py:24-120) re-expressed as ONE lazy DataFrame chain.
   *
-  * Catalyst fuses every filter/projection here into a single
-  * whole-stage-codegen'd stage; the only exchange in the whole plan is the
-  * hash-partition shuffle for `dropDuplicates("link")` — at cluster scale
-  * that is a single shuffle on the dedup key and nothing else, vs the
-  * reference's 13 full materialized intermediate frames.
+  * The chain is built in seven plan steps, one projection or filter per
+  * stage, not one Dataset per column or rule: Spark analyzes each Dataset
+  * as it is built, and on one generated day's input ~30 chained
+  * `withColumn`/`filter` steps took 44–63 ms per call to build against
+  * 11–19 ms for these seven, a cost every micro-batch of the daily leg
+  * pays. Catalyst fuses the steps on each side of the dedup into
+  * whole-stage-codegen'd stages. The dedup is the one step that needs its
+  * rows clustered by link: a hash-partition shuffle on the dedup key,
+  * unless the input is already one partition (`Pipeline`'s per-file leg),
+  * where the whole chain runs in one task with no exchange. The reference
+  * materializes 13 full intermediate frames.
   */
 object Transform {
 
@@ -42,15 +48,15 @@ object Transform {
       dedupOrder: Option[Column] = None): DataFrame = {
     val strCols = raw.schema.fields.filter(_.dataType.typeName == "string").map(_.name)
 
-    // per-row source file, taken in the scan stage: above the dedup's
-    // shuffle input_file_name() no longer knows the file and returns ''
-    val scanned = fileName.fold(
-      raw.withColumn("file_name", Parse.baseName(input_file_name())))(_ => raw)
-
-    // unidecode at extract time (scripts/extract.py:45), every string column.
-    val translit = strCols.foldLeft(scanned) { (d, c) =>
-      d.withColumn(c, Transliterate(col(c)))
-    }
+    // unidecode at extract time (scripts/extract.py:45), every string
+    // column, plus the per-row source file, taken in the scan stage: above
+    // the dedup's shuffle input_file_name() no longer knows the file and
+    // returns ''
+    val lineage =
+      if (fileName.isEmpty) Map("file_name" -> Parse.baseName(input_file_name()))
+      else Map.empty[String, Column]
+    val translit = raw.withColumns(
+      strCols.map(c => c -> Transliterate(col(c))).toMap ++ lineage)
 
     // dedup by ad URL (scripts/transform.py:62). Deterministic keep-first =
     // min_by over the ordering column: partial aggregation combines
@@ -66,8 +72,8 @@ object Transform {
     // (transliterate / address_parts / digits_only) inside every
     // predicate, per pre-dedup row. min_by(struct) is not hash-aggregable
     // (Spark plans a SortAggregate) but the aggregate is a filter-pushdown
-    // BARRIER: the costly string work runs exactly once per surviving
-    // row, which dominates the sort cost by far. Measure the whole chain,
+    // BARRIER: the costly string work runs above it, on deduped rows
+    // only, which dominates the sort cost by far. Measure the whole chain,
     // not the operator in isolation.
     val deduped = dedupOrder match {
       case Some(ord) =>
@@ -79,43 +85,50 @@ object Transform {
     }
 
     // NBSP normalize on all string columns (scripts/transform.py:63)
-    val normalized = strCols.foldLeft(deduped) { (d, c) =>
-      d.withColumn(c, Parse.normalizeNbsp(col(c)))
-    }
+    val normalized = deduped.withColumns(
+      strCols.map(c => c -> Parse.normalizeNbsp(col(c))).toMap)
 
     normalized
       // currency filter: drop Slovak EUR listings (scripts/transform.py:66)
       .filter(!col("price_czk").contains("EUR"))
-      // strip 'Kc', digits-only parse (scripts/transform.py:67-68)
-      .withColumn("price_czk", Parse.digitsToLong(col("price_czk")))
-      // min-price floor (scripts/transform.py:71)
-      .filter(col("price_czk") >= 500)
-      // rent/sale sanity filters (scripts/transform.py:72-73)
-      .filter(Parse.keepRentSane(col("purpose"), col("price_czk")))
-      .filter(Parse.keepSaleSane(col("purpose"), col("price_czk")))
-      // size: strip 'm2', coerce, 0-fill (scripts/transform.py:76-78)
-      .withColumn("size_m2", Parse.sizeToInt(col("size_m2")))
-      // region derive + address rewrite (scripts/transform.py:81-91) —
-      // AddressParts computes both from ONE split (the Column forms split
-      // the address four times); staged withColumn keeps it one eval/row.
-      // NULL address: the expression null-propagates, but the reference's
-      // when/otherwise semantics default region to Praha and keep the
-      // address NULL — coalesce restores that (and oracle parity).
-      .withColumn("__ap", graft.expr.AddressParts(col("address")))
-      .withColumn("region", coalesce(col("__ap.region"), lit("Praha")))
-      .withColumn("address", col("__ap.address"))
-      .drop("__ap")
-      // region whitelist (scripts/transform.py:92)
-      .filter(col("region").isin(PropertySchema.czechRegions: _*))
-      // price_per_m2, NULL when size 0 (scripts/transform.py:96-102)
-      .withColumn("price_per_m2", Parse.pricePerM2(col("price_czk"), col("size_m2")))
-      // land cap (scripts/transform.py:103)
-      .filter(Parse.keepLandCap(col("purpose"), col("price_per_m2")))
-      // batch metadata (scripts/transform.py:106-112)
-      .withColumn("dump_date", lit(dumpDate))
-      .withColumn("file_name", fileName.fold(col("file_name"))(lit))
+      .withColumns(Map(
+        // strip 'Kc', digits-only parse (scripts/transform.py:67-68)
+        "price_czk" -> Parse.digitsToLong(col("price_czk")),
+        // size: strip 'm2', coerce, 0-fill (scripts/transform.py:76-78)
+        "size_m2" -> Parse.sizeToInt(col("size_m2")),
+        // region derive + address rewrite (scripts/transform.py:81-91):
+        // AddressParts computes both from ONE split (the Column forms
+        // split the address four times)
+        "__ap" -> graft.expr.AddressParts(col("address"))))
       // canonical column order (scripts/transform.py:115-116)
-      .select(PropertySchema.transformed.fieldNames.map(col).toIndexedSeq: _*)
+      .select(
+        col("purpose"),
+        col("__ap.address").as("address"),
+        // NULL address: the expression null-propagates, but the
+        // reference's when/otherwise semantics default region to Praha and
+        // keep the address NULL — coalesce restores that (and oracle parity)
+        coalesce(col("__ap.region"), lit("Praha")).as("region"),
+        col("size_m2"),
+        col("design"),
+        col("price_czk"),
+        // price_per_m2, NULL when size 0 (scripts/transform.py:96-102)
+        Parse.pricePerM2(col("price_czk"), col("size_m2")).as("price_per_m2"),
+        col("link"),
+        // batch metadata (scripts/transform.py:106-112)
+        lit(dumpDate).as("dump_date"),
+        fileName.fold(col("file_name"))(lit).as("file_name"))
+      // the keep-filters as one predicate: min-price floor
+      // (scripts/transform.py:71), rent/sale sanity (:72-73), region
+      // whitelist (:92) and land cap (:103). Catalyst pushes this filter
+      // below the projections and re-derives `region` inside it from its
+      // own address_parts(address): AddressParts runs once in the filter
+      // for every row that reaches it and once more in the projection for
+      // every row that passes (TransformSpec pins the count).
+      .filter(col("price_czk") >= 500 &&
+        Parse.keepRentSane(col("purpose"), col("price_czk")) &&
+        Parse.keepSaleSane(col("purpose"), col("price_czk")) &&
+        col("region").isin(PropertySchema.czechRegions: _*) &&
+        Parse.keepLandCap(col("purpose"), col("price_per_m2")))
   }
 
   /** Validation with a quarantine verdict instead of silent drops: every

@@ -3,9 +3,10 @@ package graft.etl
 import java.nio.file.{Files, Paths}
 import java.sql.DriverManager
 
+import org.apache.spark.sql.GraftBridge
 import org.apache.spark.sql.functions.lit
 
-import graft.SparkSpec
+import graft.{Recorder, SparkSpec}
 
 /** The FUSED pipeline across a restart: file arrival → transform chain →
   * Derby JDBC append + archive, as one streaming query
@@ -23,7 +24,9 @@ import graft.SparkSpec
   *      table unchanged (delete-then-append keyed by batch_id).
   *
   * A restarted leg must also reuse the generated code of the previous run:
-  * the daily cadence restarts the query every day.
+  * the daily cadence restarts the query every day. Each file's batch is one
+  * task with no shuffle, and a file without data rows is an empty batch
+  * that still commits and archives.
   */
 class StreamingJdbcSpec extends SparkSpec {
 
@@ -126,6 +129,85 @@ class StreamingJdbcSpec extends SparkSpec {
     val batches = spark.read.jdbc(url, table, new java.util.Properties())
       .select("batch_id").distinct().count()
     assert(batches == 4L)
+  }
+
+  test("each file's micro-batch is one task and plans no shuffle") {
+    val root = Files.createTempDirectory("graft_sjdbc_plan").toString
+    Files.createDirectories(Paths.get(s"$root/raw"))
+    val table = "properties_plan"
+    // each file lists its first link twice, so the per-file dedup has a
+    // duplicate to drop
+    for (n <- 1 to 2)
+      Files.writeString(Paths.get(s"$root/raw/raw_properties_$n.csv"),
+        rawTsv(s"/p$n", s"/q$n") +
+          s"Prodej bytu\tVinohradska 12, Praha\t80 m2\t3+1\t5 000 000 Kc\t/p$n\n")
+
+    val recorder = new Recorder
+    spark.sparkContext.addSparkListener(recorder)
+    val runId = try {
+      val q = Pipeline.startJdbcLoadStream(spark, s"$root/raw", url, table,
+        s"$root/archive", s"$root/ckpt", "2026_08_12_080000")
+      q.awaitTermination(120000)
+      GraftBridge.drainListeners(spark)
+      q.runId.toString
+    } finally spark.sparkContext.removeSparkListener(recorder)
+
+    // the executions that scan a batch's rows (Recorder's checkpoint_scan
+    // counts RDD scans, and a batch is an RDD): one per file, each without
+    // an exchange
+    val batchPlans = recorder.plans.values.collect {
+      case (g, qe) if g == runId &&
+          Recorder.digest(qe.executedPlan)("checkpoint_scan") > 0 => qe.executedPlan
+    }.toSeq
+    assert(batchPlans.size == 2)
+    batchPlans.foreach { p =>
+      assert(Recorder.digest(p)("exchange") == 0, Recorder.finalPlanString(p))
+    }
+    // one stage of one task per batch, and nothing shuffled
+    val run = recorder.groups(runId)
+    assert(run.jobs == 2 && run.stages == 2 && run.tasks == 2,
+      s"${run.jobs} jobs, ${run.stages} stages, ${run.tasks} tasks")
+    assert(run.stageTaskMs.values.forall(_.size == 1))
+    assert(run.shuffleWriteBytes == 0L)
+
+    // the dedup still dropped each file's repeat, every row keeps its file
+    // and each file was its own batch
+    assert(tableLinks(table) == Seq("/p1", "/p2", "/q1", "/q2"))
+    assert(byLink(table, "file_name") == (1 to 2).flatMap(n =>
+      Seq(s"/p$n", s"/q$n").map(_ -> s"raw_properties_$n.csv")).toMap)
+    val batches = spark.read.jdbc(url, table, new java.util.Properties())
+      .select("batch_id").distinct().count()
+    assert(batches == 2L)
+  }
+
+  test("a header-only file is an empty batch: it commits, appends nothing and is archived") {
+    // reference rule: pandas reads a header-only CSV as an empty frame, the
+    // transform keeps it empty and to_sql(if_exists='append') adds no row
+    // (scripts/transform.py:24-120, scripts/load_db.py:32-47); the file is
+    // still processed, so it is archived (scripts/transform.py:122-139)
+    val root = Files.createTempDirectory("graft_sjdbc_empty").toString
+    Files.createDirectories(Paths.get(s"$root/raw"))
+    val table = "properties_header_only"
+    Files.writeString(Paths.get(s"$root/raw/raw_properties_1.csv"),
+      "purpose\taddress\tsize_m2\tdesign\tprice_czk\tlink\n")
+    val q1 = Pipeline.startJdbcLoadStream(spark, s"$root/raw", url, table,
+      s"$root/archive", s"$root/ckpt", "2026_08_12_080000")
+    q1.awaitTermination(120000)
+    assert(q1.exception.isEmpty)
+    assert(Files.exists(Paths.get(s"$root/ckpt/commits/0")), "batch 0 did not commit")
+    assert(tableLinks(table).isEmpty)
+
+    // the next run loads its own file and archives the empty one (Spark
+    // archives batch N's source when batch N+1 starts)
+    Files.writeString(Paths.get(s"$root/raw/raw_properties_2.csv"),
+      rawTsv("/e1", "/e2"))
+    Pipeline.startJdbcLoadStream(spark, s"$root/raw", url, table,
+      s"$root/archive", s"$root/ckpt", "2026_08_13_080000").awaitTermination(120000)
+    assert(tableLinks(table) == Seq("/e1", "/e2"))
+    assert(!Files.exists(Paths.get(s"$root/raw/raw_properties_1.csv")))
+    val archived = Files.walk(Paths.get(s"$root/archive")).toArray
+      .map(_.toString).filter(_.endsWith("raw_properties_1.csv"))
+    assert(archived.length == 1)
   }
 
   test("jdbcIdempotentAppend: distinct batch ids accumulate, same id replaces") {

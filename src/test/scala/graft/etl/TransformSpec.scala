@@ -1,9 +1,12 @@
 package graft.etl
 
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
 import graft.SparkSpec
-import graft.schema.Property
+import graft.expr.AddressParts
+import graft.schema.{Property, PropertySchema}
 
 /** Golden end-to-end test of the full 13-step transform chain
   * (reference: scripts/transform.py:24-120): a hand-built raw fixture in
@@ -82,6 +85,56 @@ class TransformSpec extends SparkSpec {
       col("link"))
     val out2 = Transform(again, dump, Some(fname), dedupOrder = Some(col("id")))
     assert(out2.count() == once.count())
+  }
+
+  /** The raw columns with a leading nullable `id`, the dedup order. */
+  private val rawWithId = StructType(
+    StructField("id", LongType) +: PropertySchema.raw.fields.toSeq)
+
+  /** Transform over both dedup paths: an arbitrary row, or the least id. */
+  private def bothDedups(raw: DataFrame): Seq[DataFrame] = Seq(
+    Transform(raw.drop("id"), dump, Some(fname)),
+    Transform(raw, dump, Some(fname), dedupOrder = Some(col("id"))))
+
+  test("an empty frame transforms to an empty frame of the canonical schema") {
+    // reference rule: the chain's filters and its canonical column select
+    // (scripts/transform.py:115-116) on an empty frame give an empty frame
+    // with the ten columns
+    val raw = spark.createDataFrame(new java.util.ArrayList[Row](), rawWithId)
+    bothDedups(raw).foreach { out =>
+      assert(out.schema.map(f => f.name -> f.dataType) ==
+        PropertySchema.transformed.map(f => f.name -> f.dataType))
+      assert(out.count() == 0L)
+    }
+  }
+
+  test("a row whose every column is NULL is dropped; the row beside it is kept") {
+    // reference rule: the currency filter (scripts/transform.py:66) keeps a
+    // row only when its price is shown not to be in EUR. A NULL price
+    // cannot be: under SQL WHERE semantics NOT contains(NULL, 'EUR') is
+    // NULL and drops the row, as the DuckDB oracle's chain (`chainSql`)
+    // does. pandas gives no answer to keep: `~` on the NaN that
+    // str.contains returns for a missing price raises a TypeError, which
+    // fails the whole file.
+    val good = Row(1L, "Prodej bytu", "Vinohradská 12, Praha", "80 m2", "3+1",
+      "5 000 000 Kč", "/a")
+    val raw = spark.createDataFrame(java.util.Arrays.asList(
+      good, Row(Seq.fill(7)(null): _*)), rawWithId)
+    bothDedups(raw).foreach { out =>
+      assert(out.as[Property].collect().toSeq == Seq(expected.find(_.link == "/a").get))
+    }
+  }
+
+  test("AddressParts runs twice per kept row: in the pushed-down whitelist and in the projection") {
+    // Catalyst pushes the region whitelist below the projection that
+    // derives region, re-deriving address_parts(address) inside the
+    // filter; the projection derives it once more for the rows that pass
+    val raw = rawRows.toDF("id", "purpose", "address", "size_m2", "design", "price_czk", "link")
+    bothDedups(raw).foreach { out =>
+      val plan = out.queryExecution.optimizedPlan
+      val n = plan.map(_.expressions.map(_.collect { case a: AddressParts => a }.size).sum).sum
+      assert(n == 2, plan.treeString)
+    }
   }
 
   test("validateWithReasons collects every violated rule; NULL predicates are violations") {

@@ -57,7 +57,13 @@ class SourceDisciplineSpec extends AnyFunSuite {
     // object per dump (SURVEY §2.2); coalesce(1) only under the explicit
     // singleFile flag
     ("Pipeline.scala", "if (singleFile) df.coalesce(1)",
-      "reference single-object sink contract, flag-gated"))
+      "reference single-object sink contract, flag-gated"),
+    // Pipeline transform leg: a micro-batch is one file
+    // (maxFilesPerTrigger=1) read unsplit (multiLine), so it is one
+    // partition already; coalesce(1) moves no row and only lets the
+    // planner see the single partition that the per-file dedup needs
+    ("Pipeline.scala", "Transform(batch.coalesce(1), dumpDate)",
+      "per-file micro-batch, already one partition"))
 
   // NOTE `repartition(1[,)]`/`coalesce(1[,)]`: the multi-arg forms
   // repartition(1, col) / coalesce(1, ...) are parallelism-1 all the same

@@ -2,20 +2,12 @@ package graft.streaming
 
 import java.nio.file.Files
 
+import org.apache.spark.sql.functions.col
+
 import graft.SparkSpec
 
 /** Streaming NEAR-dup ingest: MinHash bands propose against the persisted
   * band store, signature agreement confirms, min-id wins in-batch.
-  *
-  * Unlike IngestSpec and ScdSpec, no case here asserts that a restarted
-  * run compiles nothing. When batches hold near-duplicates, a run of this
-  * leg compiles about 70 classes, too many for the 100-entry codegen
-  * cache of the shared test session, so a restart compiles some of them
-  * again. Four AvailableNow runs on one checkpoint, two files per run,
-  * each file with a document, its in-batch near-dup and a near-dup of the
-  * previous run's document, compiled 71 / 24 / 24 / 12 classes in a fresh
-  * test JVM (65 / 55 / 53 / 56 with batches in the query's own session),
-  * and 71 / 33 / 0 / 0 with spark.sql.codegen.cache.maxEntries=2000.
   */
 class NearDupIngestSpec extends SparkSpec {
   import spark.implicits._
@@ -62,6 +54,42 @@ class NearDupIngestSpec extends SparkSpec {
     NearDupIngest.startNearDupIngest(spark, src, schema, "doc_id", "text",
       corpus, sigs, bands, s"$root/ckpt2").awaitTermination()
     assert(spark.read.parquet(corpus).count() == 3)
+  }
+
+  test("a restarted near-dup ingest compiles no new code, after other work too") {
+    // one run of this leg compiles about 70 classes when its batch holds
+    // near-duplicates, and a session serves other queries between the
+    // daily runs: its codegen cache must keep the leg's classes through
+    // both (GraftSession sizes it)
+    val root = Files.createTempDirectory("graft_ndrestart").toString
+    val src = s"$root/src"
+    val schema = Seq.empty[(Long, String)].toDF("doc_id", "text").schema
+    def doc(run: Int, f: Int): String = words(s"run${run}doc${f}w", 30)
+    // per run, two files; each holds a document, its in-batch near-dup and
+    // a near-dup of the previous run's document from the same file slot
+    def run(r: Int): Long = {
+      // other work first: queries that differ only in a literal, which
+      // codegen writes into the source, so each compiles a class of its own
+      for (k <- 1 to 150)
+        spark.range(4).select((col("id") * (r * 1000L + k)).as("x"))
+          .write.format("noop").mode("overwrite").save()
+      for (f <- 1 to 2) {
+        val id = r * 100L + f * 10
+        Seq((id, doc(r, f)), (id + 1, doc(r, f) + " omega"),
+            (id + 2, doc(r - 1, f) + " zeta"))
+          .toDF("doc_id", "text").coalesce(1).write.mode("append").parquet(src)
+      }
+      classesCompiledBy(NearDupIngest.startNearDupIngest(spark, src, schema,
+        "doc_id", "text", s"$root/corpus", s"$root/sigs", s"$root/bands",
+        s"$root/ckpt").awaitTermination())
+    }
+    val compiled = (1 to 4).map(run)
+    assert(compiled.drop(2) == Seq(0L, 0L), s"classes compiled per run: $compiled")
+    // run 1 keeps its documents and its fresh third ones; every later run
+    // keeps only its own documents
+    val kept = spark.read.parquet(s"$root/corpus").select("doc_id").as[Long]
+      .collect().sorted.toSeq
+    assert(kept == Seq(110L, 112L, 120L, 122L, 210L, 220L, 310L, 320L, 410L, 420L))
   }
 
   test("blank docs are excluded; short docs dedup near-exactly") {
