@@ -21,7 +21,18 @@ object GraftSession {
   private val CodegenCacheEntries = 8192
 
   /** `local[cores]` with one shuffle partition per core, UTC session time,
-    * no UI, WARN logging and a codegen cache of [[CodegenCacheEntries]].
+    * no UI, WARN logging and a codegen cache of [[CodegenCacheEntries]],
+    * keyed on generated source that carries no stage id.
+    *
+    * Spark names each whole-stage class after its codegen stage id, and
+    * adaptive execution numbers a query's stages in the order it plans
+    * them, which follows the order its shuffle stages finish. So one
+    * pipeline of one query got a different class name, a different source
+    * and a cache miss on most reruns: sim_filtered_partitioned compiled
+    * 38, 34 and 10 classes on its second to fourth run at sf0.001, and 0
+    * once `spark.sql.codegen.useIdInClassName` is off. What that gives up:
+    * a generated class's name no longer says which stage it is; the id is
+    * still in the plan and in the class's source comment.
     * `warehouseDir` moves catalog writes (`saveAsTable`) out of the working
     * directory.
     */
@@ -32,6 +43,7 @@ object GraftSession {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
       .config("spark.sql.codegen.cache.maxEntries", CodegenCacheEntries.toString)
+      .config("spark.sql.codegen.useIdInClassName", "false")
     warehouseDir.foreach(b.config("spark.sql.warehouse.dir", _))
     val spark = b.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

@@ -11,7 +11,7 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types.{DataType, StringType, StructType}
 
 import graft.schema.PropertySchema
-import graft.streaming.MicroBatch
+import graft.streaming.{MicroBatch, Streams}
 
 /** The reference's orchestration semantics (SURVEY.md §2.10) re-expressed
   * with Spark file sources.
@@ -169,13 +169,9 @@ object Pipeline {
   def startLoadStream(spark: SparkSession, transformedDir: String,
       sinkDir: String, archiveDir: String, checkpoint: String,
       trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
-    arrivals(spark, PropertySchema.transformed, transformedDir, archiveDir)
-      .writeStream
-      .format("parquet")
-      .option("path", sinkDir)
-      .option("checkpointLocation", checkpoint)
-      .trigger(trigger)
-      .start()
+    Streams.start(
+        arrivals(spark, PropertySchema.transformed, transformedDir, archiveDir),
+        checkpoint, trigger)(_.format("parquet").option("path", sinkDir))
 
   /** Timestamped object key (scripts/dag.py:39):
     * `raw_properties_<strftime %Y_%m_%d_%H%M%S in Europe/Prague>.csv`.

@@ -65,18 +65,13 @@ object Ingest {
       schema: StructType, textCol: String, tsCol: String,
       corpusDir: String, checkpoint: String, horizon: String,
       trigger: Trigger = Trigger.AvailableNow()): StreamingQuery = {
-    import org.apache.spark.sql.functions.col
-    spark.readStream.schema(schema).parquet(srcDir)
-      .withColumn("__fp", graft.llm.TextStats.fingerprint(col(textCol)))
+    val deduped = spark.readStream.schema(schema).parquet(srcDir)
+      .withColumn("__fp", TextStats.fingerprint(col(textCol)))
       .withWatermark(tsCol, horizon)
       .dropDuplicatesWithinWatermark("__fp")
       .drop("__fp")
-      .writeStream
-      .format("parquet")
-      .option("path", corpusDir)
-      .option("checkpointLocation", checkpoint)
-      .trigger(trigger)
-      .start()
+    Streams.start(deduped, checkpoint, trigger)(
+      _.format("parquet").option("path", corpusDir))
   }
 
   /** Rate-limited ingestion — the reference's scrape throttle

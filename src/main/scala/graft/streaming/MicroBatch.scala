@@ -35,17 +35,19 @@ object MicroBatch {
     * decode every row to an external `Row` and encode it again, on every
     * scan of the batch.) The batch keeps its lineage: `input_file_name()`
     * still names each row's source file.
+    *
+    * The query starts through [[Streams.start]], which has a side effect on
+    * the caller's session: it names [[CheckpointFiles]] as the session's
+    * checkpoint file manager, and the session keeps that setting after the
+    * leg has started.
     */
   def start(source: DataFrame, checkpoint: String, trigger: Trigger)(
       body: (DataFrame, Long) => Unit): StreamingQuery = {
     val spark = source.sparkSession
-    source.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+    Streams.start(source, checkpoint, trigger)(
+      _.foreachBatch { (batch: DataFrame, batchId: Long) =>
         body(GraftBridge.ofRows(spark, batch.queryExecution.logical), batchId)
-      }
-      .option("checkpointLocation", checkpoint)
-      .trigger(trigger)
-      .start()
+      })
   }
 
   /** A parquet store that a batch body reads back and appends to: its

@@ -85,4 +85,17 @@ class QueriesSpec extends SparkSpec {
     }
     assert(empty.isEmpty, s"queries with 0 rows at sf0.01: ${empty.mkString(", ")}")
   }
+
+  test("a rerun of sim_filtered_partitioned compiles no new code") {
+    // adaptive execution numbers whole-stage pipelines in the order it
+    // plans them; with the stage id in the class name, reruns of this
+    // query compiled 38, 34 and 10 classes (GraftSession keeps it out)
+    assume(Files.exists(Paths.get("/root/testdata/sf0.001/embeddings.parquet")))
+    def run(): Unit = Queries.queryMap("sim_filtered_partitioned")(
+        spark, "/root/testdata/sf0.001")
+      .write.format("noop").mode("overwrite").save()
+    run()
+    val compiled = classesCompiledBy { run(); run(); run() }
+    assert(compiled == 0L, s"three reruns compiled $compiled classes")
+  }
 }

@@ -1,5 +1,11 @@
 package graft
 
+import java.nio.file.Files
+
+import scala.jdk.CollectionConverters._
+
+import jdk.jfr.Recording
+import jdk.jfr.consumer.RecordingFile
 import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
@@ -25,5 +31,24 @@ trait SparkSpec extends AnyFunSuite {
     val before = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
     body
     CodegenMetrics.METRIC_COMPILATION_TIME.getCount - before
+  }
+
+  /** Command lines of the OS processes this JVM started while `body` ran,
+    * from the JDK's `jdk.ProcessStart` event. Like the codegen counter it
+    * is JVM-wide.
+    */
+  def processesStartedBy(body: => Unit): Seq[String] = {
+    val recording = new Recording()
+    try {
+      recording.enable("jdk.ProcessStart")
+      recording.start()
+      try body finally recording.stop()
+      val dump = Files.createTempFile("graft-processes", ".jfr")
+      try {
+        recording.dump(dump)
+        RecordingFile.readAllEvents(dump).asScala.toSeq
+          .map(_.getString("command"))
+      } finally Files.delete(dump)
+    } finally recording.close()
   }
 }

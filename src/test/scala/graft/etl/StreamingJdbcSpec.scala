@@ -131,6 +131,31 @@ class StreamingJdbcSpec extends SparkSpec {
     assert(batches == 4L)
   }
 
+  test("a restarted load stream starts no readlink or chmod process") {
+    val root = Files.createTempDirectory("graft_sjdbc_forks").toString
+    Files.createDirectories(Paths.get(s"$root/raw"))
+    val table = "properties_forks"
+    def land(n: Int): Unit =
+      Files.writeString(Paths.get(s"$root/raw/raw_properties_$n.csv"),
+        rawTsv(s"/f$n", s"/g$n"))
+    def run(dumpDate: String): Unit =
+      Pipeline.startJdbcLoadStream(spark, s"$root/raw", url, table,
+        s"$root/archive", s"$root/ckpt", dumpDate).awaitTermination(120000)
+
+    // the first run makes the checkpoint's directories and, archiving its
+    // first file when its second batch starts, the archive's; the restart,
+    // like the next day's run, writes two batches of checkpoint files into
+    // them (at the parent of this spec: 60 readlink and chmod processes)
+    land(1); land(2)
+    run("2026_08_12_080000")
+    land(3); land(4)
+    val forks = processesStartedBy(run("2026_08_13_080000")).filter(c =>
+      c.startsWith("readlink ") || c.startsWith("chmod "))
+    assert(forks.isEmpty, s"${forks.size} processes, e.g. ${forks.take(3)}")
+    assert(tableLinks(table) ==
+      (1 to 4).flatMap(n => Seq(s"/f$n", s"/g$n")).sorted)
+  }
+
   test("each file's micro-batch is one task and plans no shuffle") {
     val root = Files.createTempDirectory("graft_sjdbc_plan").toString
     Files.createDirectories(Paths.get(s"$root/raw"))

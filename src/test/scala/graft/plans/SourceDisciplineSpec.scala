@@ -117,20 +117,35 @@ class SourceDisciplineSpec extends AnyFunSuite {
       s"stale whitelist entries (no matching site remains): ${stale.map(w => s"${w._1}:${w._2}")}")
   }
 
+  /** "File.scala:line" of each line under src/main/scala that contains
+    * `needle` and is not a comment line.
+    */
+  private def mainSites(needle: String): Seq[String] =
+    Using.resource(Files.walk(Paths.get("src/main/scala"))) { stream =>
+      stream.iterator().asScala
+        .filter(p => p.toString.endsWith(".scala"))
+        .flatMap { p =>
+          Files.readAllLines(p).asScala.zipWithIndex.collect {
+            case (l, i) if !l.trim.startsWith("//") && !l.trim.startsWith("*") &&
+                l.contains(needle) =>
+              s"${p.getFileName}:${i + 1}"
+          }
+        }.toSeq
+    }
+
   test("src/main builds a SparkSession in one place: GraftSession") {
-    val builders: Seq[String] =
-      Using.resource(Files.walk(Paths.get("src/main/scala"))) { stream =>
-        stream.iterator().asScala
-          .filter(p => p.toString.endsWith(".scala"))
-          .flatMap { p =>
-            Files.readAllLines(p).asScala.zipWithIndex.collect {
-              case (l, i) if !l.trim.startsWith("//") && !l.trim.startsWith("*") &&
-                  l.contains("SparkSession.builder") =>
-                s"${p.getFileName}:${i + 1}"
-            }
-          }.toSeq
-      }
+    val builders = mainSites("SparkSession.builder")
     assert(builders.size == 1 && builders.head.startsWith("GraftSession.scala:"),
       s"SparkSession.builder outside GraftSession: $builders")
+  }
+
+  test("src/main starts streaming queries in one place: Streams.start") {
+    // the one writer of every query, and the one setter of the checkpoint
+    // file manager its checkpoint files are written through
+    for (needle <- Seq(".writeStream", "checkpointFileManagerClass")) {
+      val sites = mainSites(needle)
+      assert(sites.size == 1 && sites.head.startsWith("Streams.scala:"),
+        s"$needle outside Streams.start: $sites")
+    }
   }
 }
